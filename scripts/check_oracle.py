@@ -6,9 +6,11 @@ Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
 Mimics the driver: for every query dumped by graft.Verify, run the
 oracle SQL in DuckDB over the same parquet tables, sort columns by
 name, sort rows, and compare cell-by-cell. Reports schema and value
-diffs per query. (Driver-side tooling only — not part of the library.)
+diffs per query. When SPARK_GRAFT_ONLY (a comma-separated name list)
+is set, as for a filtered graft.Verify run, only those queries are
+compared. (Driver-side tooling only — not part of the library.)
 """
-import sys, json, glob, math
+import sys, os, json, glob, math
 
 import duckdb
 
@@ -43,6 +45,9 @@ def main(sf_dir, out_dir):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    if only:
+        oracle = {n: q for n, q in oracle.items() if n in only.split(",")}
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         pdirs = glob.glob(f"{out_dir}/{name}/*.parquet")

@@ -29,13 +29,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // planner-integrated data skipping: plain filters over directories
-    // registered with graft.plans.GraftTables prune files against the
-    // committed stats/bloom epochs at optimization time
-    ext.injectOptimizerRule(session => graft.plans.StatsPruneRule(session))
     // metadata-only whole-table aggregates: COUNT/MIN/MAX over a
-    // registered directory collapse to the committed stats epoch's
-    // answer when the epoch provably covers the scan's exact file set
+    // manifest-table snapshot collapse to the answer folded from the
+    // version's manifest rows when every consulted cell is exact
     ext.injectOptimizerRule(session => graft.plans.MetaAggRule(session))
     // SQL MERGE INTO / UPDATE / DELETE on graft catalog tables:
     // substituted at post-hoc resolution (before the optimizer's

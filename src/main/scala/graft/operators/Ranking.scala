@@ -102,12 +102,11 @@ object Ranking {
   /** Fold a DOCUMENT BATCH into a committed inverted index without
     * rebuilding it: new docs insert their postings, re-landed doc ids
     * REPLACE theirs entirely (merge keyed by doc_id, so tokens the new
-    * text no longer contains cannot survive as stale postings — the
-    * same rewrite-staleness class as [[graft.sources.FileBloomIndex]]'s
-    * path merge, closed the same way). Cost ∝ the batch tokenize plus
-    * one index-sized epoch rewrite — never the corpus; this is how the
-    * index rides an ingest loop ([[graft.sources.FileManifest]] delta →
-    * upsert) instead of paying a full [[buildInvertedIndex]] per epoch.
+    * text no longer contains cannot survive as stale postings). Cost ∝
+    * the batch tokenize plus one index-sized epoch rewrite — never the
+    * corpus; this is how the index rides an ingest loop
+    * ([[graft.sources.FileManifest]] delta → upsert) instead of paying
+    * a full [[buildInvertedIndex]] per epoch.
     * doclen/avgdl move with the same commit, so BM25 scores through the
     * updated index equal a fresh full build's (spec + gate assert
     * row-identity). Bootstraps the epochs when the index is new.
@@ -128,8 +127,7 @@ object Ranking {
     (commit(postings, "postings"), commit(doclen, "doclen"))
   }
 
-  /** One manifest-driven index-ingest tick — the retrieval twin of
-    * [[graft.sources.MetadataMaintenance.tick]]: discover doc files
+  /** One manifest-driven index-ingest tick: discover doc files
     * newly landed under `landingDir` (via the committed
     * [[graft.sources.FileManifest]]), read ONLY those files, fold
     * their documents into the index with [[upsertIndexedDocs]], and

@@ -7,33 +7,27 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, lit, max, min, sum, when}
 
 /** Metadata-only aggregates in the PLANNER — the Delta/Iceberg
-  * "COUNT(*) answered from the manifest" ergonomics on plain parquet:
-  * a whole-table `COUNT(*)/COUNT(c)/MIN(c)/MAX(c)` aggregate over a
-  * [[GraftTables]]-registered directory collapses at optimization
-  * time to a [[LocalRelation]] holding the answer computed from the
-  * committed [[graft.sources.FileStats]] epoch — zero data I/O, no
-  * scan stage, independent of table size. The API-level twin is
-  * [[graft.sources.FileStats.tableSummary]]; this rule is what makes
-  * a user's plain `spark.read.parquet(dir).agg(...)` get the same
-  * answer for free.
+  * "COUNT(*) answered from the manifest" ergonomics: a whole-table
+  * `COUNT(*)/COUNT(c)/MIN(c)/MAX(c)` aggregate over a manifest-table
+  * snapshot (`format("graft")` or a catalog read) collapses at
+  * optimization time to a [[LocalRelation]] holding the answer
+  * computed from the version's manifest rows — zero data I/O, no scan
+  * stage, independent of table size. The manifest IS the listing, so
+  * its per-file stats cover the scan's file set by construction.
   *
-  * Exactness is PROVEN per query, never assumed: the rewrite fires
-  * only when the stats epoch's path set covers EXACTLY the scan's own
-  * live file listing (one metadata-scale set comparison — the same
-  * listing the scan would use), each path appears once, and every
-  * consulted PER-FILE summary cell is proven usable (footer-collected
-  * stats may record NULL = "unknown" for writer-omitted columns; one
-  * unknown cell among known ones would make the null-skipping global
-  * fold silently wrong, so any unknown cell — except a min/max NULL
-  * from a provably all-NULL file — disqualifies: unknown must scan,
-  * never guess). Any mismatch, unsupported aggregate shape (DISTINCT,
-  * FILTER, grouping keys, untracked column), or interposed Filter
-  * leaves the plan untouched — like [[StatsPruneRule]], the metadata
-  * path is an optimization, not a correctness dependency.
+  * Exactness is PROVEN per query: every consulted PER-FILE
+  * summary cell must be usable (footer-collected stats may record
+  * NULL = "unknown" for writer-omitted columns; one unknown cell among
+  * known ones would make the null-skipping global fold silently wrong,
+  * so any unknown cell — except a min/max NULL from a provably
+  * all-NULL file — disqualifies: unknown must scan, never guess).
+  * Pending equality deletes, an unsupported aggregate shape (DISTINCT,
+  * FILTER, grouping keys, untracked column), or an interposed Filter
+  * leave the plan untouched — the metadata path is an optimization,
+  * not a correctness dependency.
   *
   * Supported shapes over tracked column c:
   *   COUNT(*)/COUNT(1) = Σ row_count;  COUNT(c) = Σ row_count − Σ
@@ -42,35 +36,8 @@ import org.apache.spark.sql.functions.{col, lit, max, min, sum, when}
   */
 case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  /** Where the metadata answer comes from: a registered plain-parquet
-    * directory's external stats epoch (coverage must be PROVEN
-    * against the scan's live listing), or a manifest-table snapshot
-    * (`format("graft")` / catalog reads) whose manifest IS the
-    * listing — coverage is structural there, no proof query needed. */
-  private sealed trait MetaSource {
-    def statsCols: Seq[String]
-    def stats(): org.apache.spark.sql.DataFrame
-    def covered(): Boolean
-  }
-  private final case class FsSource(rel: HadoopFsRelation,
-                                    entry: GraftTables.Entry) extends MetaSource {
-    def statsCols: Seq[String] = entry.statsCols
-    // one read serves both the coverage proof and the answer query
-    private lazy val frame =
-      graft.sources.FileStats.readStats(spark, entry.statsRoot.get)
-    def stats(): org.apache.spark.sql.DataFrame = frame
-    def covered(): Boolean = {
-      // proof of coverage: stats paths == the scan's OWN live listing,
-      // each exactly once (metadata scale on both sides)
-      val statPaths = frame.select(col("path")).collect()
-        .map(r => GraftTables.canon(r.getString(0)))
-      val live = rel.location.inputFiles.map(p => GraftTables.canon(p))
-      statPaths.length == statPaths.distinct.length &&
-        statPaths.toSet == live.toSet
-    }
-  }
-  private final case class ManifestSource(root: String, version: Long)
-    extends MetaSource {
+  /** The answer's source: one manifest-table snapshot's rows. */
+  private final case class ManifestSource(root: String, version: Long) {
     private lazy val raw =
       graft.sinks.ManifestTable.manifest(spark, root, version)
     // manifest stat triplets are keyed by PHYSICAL column name
@@ -91,7 +58,7 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // rows may have held the extremum / the nulls) — surface those
     // cells as NULL = unknown, and the per-file honesty proof below
     // routes COUNT(c)/MIN/MAX to the scan instead of guessing
-    private lazy val frame = {
+    lazy val stats: org.apache.spark.sql.DataFrame = {
       val dv = col("dv_rows") > 0L
       val folded = physStats.foldLeft(
         raw.withColumn("row_count", col("row_count") - col("dv_rows"))) {
@@ -111,7 +78,6 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       }
     }
-    def stats(): org.apache.spark.sql.DataFrame = frame
     // the manifest IS the listing — but PENDING equality deletes live
     // outside its row counts (they resolve at scan time), so a version
     // carrying them must route to the scan, never answer from stats
@@ -132,16 +98,7 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
   /** The scan under the aggregate, seen through at most a pruning
     * Project of plain attributes (what column pruning inserts). Any
     * Filter, join, or computed projection disqualifies. */
-  private def bareRelation(p: LogicalPlan): Option[MetaSource] = p match {
-    case l: LogicalRelation => l.relation match {
-      case r: HadoopFsRelation if !r.location.isInstanceOf[GraftPrunedFileIndex] =>
-        GraftTables.lookup(r.location.rootPaths) match {
-          case Some(entry) if entry.statsRoot.nonEmpty =>
-            Some(FsSource(r, entry))
-          case _ => None
-        }
-      case _ => None
-    }
+  private def bareRelation(p: LogicalPlan): Option[ManifestSource] = p match {
     case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
       d.table match {
         case t: graft.sources.v2.GraftTable =>
@@ -156,8 +113,7 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
   /** Either Some(LocalRelation answer) or None when any aggregate
     * shape or metadata proof fails. */
   private def tryAnswer(agg: Aggregate, aggExprs: Seq[NamedExpression],
-                        source: MetaSource): Option[LogicalPlan] = {
-    val entry = source // shape checks below read the tracked columns
+                        source: ManifestSource): Option[LogicalPlan] = {
     // every output must be a supported, unfiltered, non-distinct
     // aggregate (or a literal riding along)
     sealed trait Need
@@ -173,11 +129,11 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // not match the COUNT(*) shape (leave it to the scan)
           case Count(Seq(Literal(v, _))) if v != null => Some(NRows)
           case Count(Seq(a: AttributeReference))
-            if entry.statsCols.contains(a.name) => Some(NCount(a.name))
+            if source.statsCols.contains(a.name) => Some(NCount(a.name))
           case Min(a: AttributeReference)
-            if entry.statsCols.contains(a.name) => Some(NMin(a.name))
+            if source.statsCols.contains(a.name) => Some(NMin(a.name))
           case Max(a: AttributeReference)
-            if entry.statsCols.contains(a.name) => Some(NMax(a.name))
+            if source.statsCols.contains(a.name) => Some(NMax(a.name))
           case _ => None
         }
       case Alias(l: Literal, _) => Some(NLit(l))
@@ -188,7 +144,7 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
     StatsPruneRule.inMetadataQuery.set(true)
     try {
       if (!source.covered()) return None
-      val stats = source.stats()
+      val stats = source.stats
       val wanted = needs.flatten.distinct.filter(!_.isInstanceOf[NLit])
       val cols = wanted.map {
         case NRows => sum(col("row_count")).as("_n_rows")

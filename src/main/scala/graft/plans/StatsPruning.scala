@@ -4,154 +4,35 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, lit}
 
-/** Planner-integrated data skipping over the committed
-  * [[graft.sources.FileStats]] / [[graft.sources.FileBloomIndex]]
-  * epochs — the Delta/Iceberg ergonomics on plain parquet: after a
-  * one-time [[GraftTables.register]] of a directory's metadata roots,
-  * a plain `spark.read.parquet(dir).filter(...)` prunes files at
-  * PLANNING time with no API opt-in. The read paths
-  * (`FileStats.readRange`, `FileBloomIndex.readKeys`) stay available
-  * for explicit use; this rule is what makes every OTHER query — the
-  * ones a user writes without thinking about metadata — benefit.
+/** The shared file-proof engine over per-file statistics — the
+  * manifest rows [[graft.sinks.ManifestTable]] commits (path,
+  * row_count, c_min/c_max/c_nulls per tracked column) and the per-file
+  * bloom indexes [[graft.sinks.ManifestTable.buildBloom]] keeps beside
+  * a table. Consumers: the `format("graft")` scan's file listing
+  * ([[graft.sources.v2.GraftManifestFileIndex]]), the row-level
+  * operations' touched-file selection, and [[MetaAggRule]]'s
+  * re-entrancy guard.
   *
-  * Soundness is exclusion-by-proof over the scan's OWN listing: a
-  * file is dropped only when a committed metadata row for that exact
-  * file proves no row can match (stats envelope misses the conjunct's
-  * range, or the bloom filter denies every probed key — blooms have
-  * no false negatives). Files with no metadata row (not yet indexed)
-  * and stale rows for deleted files (they exclude nothing from a
-  * listing they don't appear in) both degrade to "keep" — the rule is
-  * correct under ANY metadata staleness, and metadata freshness only
-  * governs how much is pruned. Spark still applies the full predicate
-  * to surviving rows, so a kept-but-unmatching file costs I/O, never
-  * wrong rows.
-  *
-  * Scale shape: the planning-time cost is two metadata-scale queries
-  * (the |files|-row stats/bloom epochs) per registered scan — the
-  * same listing-order cost Delta pays against its log, independent of
-  * data volume. The pruned index DELEGATES to the original file
-  * index, so directory-partition pruning, schema, and locality
-  * compose unchanged.
+  * Soundness is exclusion-by-proof: a file is dropped only when its
+  * own statistics prove no row can match (an envelope misses the
+  * conjunct's range, or the bloom filter denies every probed key —
+  * blooms have no false negatives). Unknown cells (NULL min/max from a
+  * writer that recorded no stats) and files with no index row degrade
+  * to "keep". Spark still applies the full predicate to surviving
+  * rows, so a kept-but-unmatching file costs I/O, never wrong rows.
   */
-object GraftTables {
-
-  /** Metadata registration for one parquet directory. */
-  final case class Entry(dataDir: String,
-                         statsRoot: Option[String], statsCols: Seq[String],
-                         bloomRoot: Option[String], bloomKey: Option[String])
-
-  private val tables =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
-
-  private[plans] def canon(p: String): String = new Path(p).toUri.getPath
-
-  /** Register `dataDir`'s committed metadata roots. Idempotent;
-    * re-registering replaces the entry. `statsCols` must name columns
-    * tracked by the stats table at `statsRoot`; `bloomKey` the column
-    * indexed at `bloomRoot`. */
-  def register(dataDir: String,
-               statsRoot: Option[String] = None,
-               statsCols: Seq[String] = Nil,
-               bloomRoot: Option[String] = None,
-               bloomKey: Option[String] = None): Unit = {
-    require(statsRoot.isEmpty == statsCols.isEmpty,
-      "statsRoot and statsCols must be given together")
-    require(bloomRoot.isEmpty == bloomKey.isEmpty,
-      "bloomRoot and bloomKey must be given together")
-    require(statsRoot.nonEmpty || bloomRoot.nonEmpty,
-      "register at least one metadata root")
-    tables.put(canon(dataDir),
-      Entry(dataDir, statsRoot, statsCols, bloomRoot, bloomKey)): Unit
-  }
-
-  def unregister(dataDir: String): Unit = tables.remove(canon(dataDir)): Unit
-  def clear(): Unit = { tables.clear(); StatsPruneRule.clearProofCache() }
-
-  /** Single-root lookup — the exact-coverage consumers
-    * ([[MetaAggRule]]) need ONE metadata identity whose stats cover
-    * one listing. */
-  private[plans] def lookup(rootPaths: Seq[Path]): Option[Entry] =
-    rootPaths match {
-      case Seq(one) => Option(tables.get(one.toUri.getPath))
-      case _ => None // multi-root scans: no single metadata identity
-    }
-
-  /** Every registered entry among a scan's roots — a MULTI-ROOT scan
-    * (`spark.read.parquet(a, b)`) prunes each registered root
-    * independently: an entry's proofs only ever name files its own
-    * stats rows list, so the union of exclusions is sound, and an
-    * unregistered root among the set simply contributes no proofs. */
-  private[plans] def lookupAll(rootPaths: Seq[Path]): Seq[Entry] =
-    rootPaths.flatMap(p => Option(tables.get(p.toUri.getPath))).toSeq
-}
-
-/** A [[FileIndex]] that delegates listing to the scan's original
-  * index and drops files the metadata PROVED unmatching. Also the
-  * idempotence marker: the rule never re-prunes a relation whose
-  * location is already one of these. */
-final class GraftPrunedFileIndex(delegate: FileIndex,
-                                 excluded: Set[String]) extends FileIndex {
-  override def rootPaths: Seq[Path] = delegate.rootPaths
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    delegate.listFiles(partitionFilters, dataFilters).map { pd =>
-      pd.copy(files = pd.files.filterNot(f =>
-        excluded.contains(f.getPath.toUri.getPath)))
-    }
-  override def inputFiles: Array[String] =
-    delegate.inputFiles.filterNot(p =>
-      excluded.contains(new Path(p).toUri.getPath))
-  override def refresh(): Unit = delegate.refresh()
-  override def sizeInBytes: Long = delegate.sizeInBytes // sound upper bound
-  override def partitionSchema: StructType = delegate.partitionSchema
-  override def metadataOpsTimeNs: Option[Long] = delegate.metadataOpsTimeNs
-}
-
-/** The optimizer rule: for a Filter directly over a registered
-  * parquet scan, consult the committed stats/bloom epochs and replace
-  * the relation's file index with a pruned delegate. Injected by
-  * [[graft.GraftExtensions]]; runs inside the operator-optimization
-  * fixed point, so the marker class above keeps it one-shot per scan
-  * and the metadata queries it issues (which re-enter the optimizer
-  * on an unregistered scan) terminate trivially. */
-case class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (StatsPruneRule.inMetadataQuery.get()) plan
-    else plan.transformDown {
-      case f @ Filter(cond, l: LogicalRelation) =>
-        l.relation match {
-          case r: HadoopFsRelation
-            if !r.location.isInstanceOf[GraftPrunedFileIndex] =>
-            GraftTables.lookupAll(r.location.rootPaths) match {
-              case Seq() => f
-              case entries =>
-                // multi-root scans prune each registered root
-                // independently; exclusion sets union soundly (each
-                // proof names only its own root's files)
-                val excluded = entries
-                  .map(e => StatsPruneRule.provablyExcluded(spark, cond, e))
-                  .reduce(_ ++ _)
-                val pruned = new GraftPrunedFileIndex(r.location, excluded)
-                Filter(cond, l.copy(relation =
-                  r.copy(location = pruned)(r.sparkSession)))
-            }
-          case _ => f
-        }
-    }
-
-}
-
 object StatsPruneRule extends org.apache.spark.internal.Logging {
-  /** Re-entrancy guard: the rule (and every other consumer of the
-    * shared proof engine) issues metadata queries during planning;
-    * those must not be pruned (or recurse). */
+
+  /** A committed per-file bloom index over one column. */
+  final case class Entry(bloomRoot: String, bloomKey: String)
+
+  private def canon(p: String): String = new Path(p).toUri.getPath
+
+  /** Re-entrancy guard: every consumer of the proof engine issues
+    * metadata queries during planning; those must not be pruned (or
+    * recurse). */
   private[graft] val inMetadataQuery: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
@@ -221,14 +102,12 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
       keys)
   }
 
-  /** Envelope proofs against an EXPLICIT stats frame (FileStats shape:
-    * path, row_count, c_min/c_max/c_nulls per tracked column) —
-    * canonical paths of files the envelopes PROVE cannot match `cond`.
-    * Shared by the planner rule, the DSv2 listing, and
-    * [[graft.sinks.ManifestTable]]'s file-granular row-level ops
-    * (whose manifest rows are themselves this shape). Throws on
-    * schema drift — callers decide whether a failed proof degrades
-    * (pruning: keep everything) or aborts. */
+  /** Envelope proofs against a stats frame (path, row_count,
+    * c_min/c_max/c_nulls per tracked column) — canonical paths of
+    * files the envelopes PROVE cannot match `cond`. Shared by the DSv2
+    * listing and [[graft.sinks.ManifestTable]]'s file-granular
+    * row-level ops. Throws on schema drift — callers decide whether a
+    * failed proof degrades (pruning: keep everything) or aborts. */
   private[graft] def excludedByEnvelopes(spark: SparkSession,
                                          cond: Expression,
                                          stats: DataFrame,
@@ -254,19 +133,24 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
       val hi = highs.get(c)
       if (lo.isEmpty && hi.isEmpty) None
       // an open side becomes a NULL bound (NullType coerces to the
-      // envelope's type): its comparison is unknown, and
-      // candidateFilesAll's explicit `<=> true` proofs treat
-      // unknown as "keep" — an open bound prunes nothing, soundly
+      // envelope's type): its comparison is unknown, and the explicit
+      // `<=> true` proofs below treat unknown as "keep" — an open
+      // bound prunes nothing, soundly
       else Some((c, lo.getOrElse(lit(null)), hi.getOrElse(lit(null))))
     }
     if (ranges.isEmpty) Set.empty
     else {
-      val all = stats.select("path").collect()
-        .map(r => GraftTables.canon(r.getString(0))).toSet
-      val kept = graft.sources.FileStats
-        .candidateFilesAll(stats, ranges)
-        .collect().map(r => GraftTables.canon(r.getString(0))).toSet
-      all -- kept
+      // a file is excluded only on PROOF: its envelope misses some
+      // range, or every row of a ranged column is NULL (a range
+      // predicate rejects NULL). NULL min/max with an unknown null
+      // count — stats a writer didn't record — proves nothing
+      val excluded = ranges.map { case (c, lo, hi) =>
+        val misses = (col(s"${c}_max") < lo) || (col(s"${c}_min") > hi)
+        val allNull = col(s"${c}_nulls") === col("row_count")
+        (misses <=> lit(true)) || (allNull <=> lit(true))
+      }.reduce(_ || _)
+      stats.filter(excluded).select("path").collect()
+        .map(r => canon(r.getString(0))).toSet
     }
   }
 
@@ -294,7 +178,6 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
   private[graft] def wholeFileMatched(cond: Expression,
                                       stats: DataFrame,
                                       statsCols: Seq[String]): Set[String] = {
-    import org.apache.spark.sql.functions.col
     // same pre-fold as excludedByEnvelopes: SQL literals arrive as
     // Cast(Literal); foldable-but-unevaluable stays unfolded (no proof)
     val folded = cond.transformUp {
@@ -389,21 +272,22 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
         val nullFree = refs.map(c => col(s"${c}_nulls") === lit(0L))
           .reduce(_ && _)
         stats.filter((proof && nullFree) <=> lit(true)).select("path")
-          .collect().map(r => GraftTables.canon(r.getString(0))).toSet
+          .collect().map(r => canon(r.getString(0))).toSet
     }
   }
 
-  /** VERSION-KEYED proof cache: the planning-time metadata queries
-    * (two collects per registered scan) are re-issued for every plan
-    * of a hot table, so identical proofs memoize. The key carries the
-    * metadata epochs' CURRENT VERSIONS (one cheap FS resolution each,
-    * no Spark job) plus the canonicalized predicate — a commit bumps
-    * the version, which changes the key, so staleness is structural:
-    * a cached entry can only ever be served for the exact epoch it
-    * was proven against (Delta caches its snapshot state the same
-    * way). Bounded LRU; an unresolvable predicate simply skips the
-    * cache. The second identical query on an unchanged table issues
-    * ZERO metadata jobs (PlanSpec-counted). */
+  /** VERSION-KEYED bloom proof cache: the planning-time index query
+    * (one collect per indexed column) is re-issued for every plan of
+    * a hot table, so identical proofs memoize. The key carries the
+    * index epoch's CURRENT VERSION and that version's commit stamp
+    * (cheap FS reads, no Spark job) plus the canonicalized predicate —
+    * a rebuild bumps the version, and an index deleted and rebuilt
+    * from version 0 (a re-created table at the same root, a
+    * type-widening rebuild) carries a new stamp, so a cached entry can
+    * only ever be served for the exact epoch it was proven against.
+    * Bounded LRU; an unresolvable predicate simply skips the cache.
+    * The second identical query on an unchanged index issues ZERO
+    * metadata jobs (PlanSpec-counted). */
   private val ProofCacheMax = 256
   private val proofCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, Set[String]](64, 0.75f, true) {
@@ -412,72 +296,56 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
         size() > ProofCacheMax
     })
 
-  private[plans] def clearProofCache(): Unit = proofCache.clear()
-
   /** Uncached proof computations (each costs the metadata jobs) —
     * test-visible, so the cache contract is pinned directly: a cache
     * hit must leave this untouched. */
   private[graft] val proofComputations = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private def proofKey(spark: SparkSession, cond: Expression,
-                       entry: GraftTables.Entry): Option[String] =
+                       entry: Entry): Option[String] =
     try {
-      val sv = entry.statsRoot.map(r =>
-        graft.sinks.VersionedTable.latestVersion(spark, r)).getOrElse(-1L)
-      val bv = entry.bloomRoot.map(r =>
-        graft.sinks.VersionedTable.latestVersion(spark, r)).getOrElse(-1L)
-      // exprIds are fresh per reader instantiation — key on the
-      // id-stripped canonical form so identical predicates from
+      val v = graft.sinks.VersionedTable.latestVersion(spark, entry.bloomRoot)
+      val ts = graft.sinks.VersionedTable.commitTimestamp(spark,
+        entry.bloomRoot, v).getOrElse(-1L)
+      // exprIds are fresh per reader instantiation, and the pushed
+      // conjuncts arrive in plan-dependent order — key on the sorted,
+      // id-stripped canonical conjuncts so identical predicates from
       // separate reads of the same table hit the same entry
-      Some(s"${entry.dataDir}|${entry.statsRoot}|$sv|${entry.bloomRoot}|$bv|" +
-        s"${entry.statsCols.mkString(",")}|${entry.bloomKey}|" +
-        cond.canonicalized.toString.replaceAll("#\\d+", ""))
+      Some(s"${entry.bloomRoot}|$v|$ts|${entry.bloomKey}|" +
+        conjuncts(cond).map(_.canonicalized.toString
+          .replaceAll("#\\d+", "")).sorted.mkString(" AND "))
     } catch { case _: Exception => None }
 
-  /** Canonical paths of files the metadata PROVES cannot match
-    * `cond`. Any failure (mis-registered roots, schema drift) logs
-    * and excludes nothing — pruning is an optimization, never a
-    * correctness dependency. */
-  private[graft] def provablyExcluded(spark: SparkSession, cond: Expression,
-                                      entry: GraftTables.Entry): Set[String] = {
+  /** Canonical paths of indexed files whose bloom denies EVERY
+    * equality/IN probe key `cond` pins on the index's column. Any
+    * failure logs and excludes nothing — pruning is an optimization,
+    * never a correctness dependency. */
+  private[graft] def bloomExcluded(spark: SparkSession, cond: Expression,
+                                   entry: Entry): Set[String] = {
+    val (_, _, keys) = extractBounds(cond, Some(entry.bloomKey))
+    if (keys.isEmpty) return Set.empty
     val key = proofKey(spark, cond, entry)
     key.flatMap(k => Option(proofCache.get(k))) match {
       case Some(hit) => hit
       case None =>
-        val computed = provablyExcludedUncached(spark, cond, entry)
+        val computed = bloomExcludedUncached(spark, keys, entry)
         key.foreach(k => proofCache.put(k, computed): Unit)
         computed
     }
   }
 
-  private def provablyExcludedUncached(spark: SparkSession, cond: Expression,
-                                       entry: GraftTables.Entry): Set[String] = {
+  private def bloomExcludedUncached(spark: SparkSession, keys: Seq[Column],
+                                    entry: Entry): Set[String] = {
     proofComputations.incrementAndGet(): Unit
-    StatsPruneRule.inMetadataQuery.set(true)
+    inMetadataQuery.set(true)
     try {
-      var excluded = Set.empty[String]
-      // stats-envelope proofs: stats-covered files NOT in the sound
-      // candidate set provably miss the range conjunction
-      for (root <- entry.statsRoot) {
-        excluded ++= excludedByEnvelopes(spark, cond,
-          graft.sources.FileStats.readStats(spark, root), entry.statsCols)
-      }
-      // bloom proofs: indexed files whose bloom denies EVERY probe key
-      val (_, _, keys) = extractBounds(cond, entry.bloomKey)
-      for (root <- entry.bloomRoot if keys.nonEmpty) {
-        val idx = graft.sources.FileBloomIndex.read(spark, root)
-        val all = idx.select("path").collect()
-          .map(r => GraftTables.canon(r.getString(0))).toSet
-        val kept = graft.sources.FileBloomIndex.candidateFiles(idx, keys)
-          .collect().map(r => GraftTables.canon(r.getString(0))).toSet
-        excluded ++= all -- kept
-      }
-      excluded
+      graft.sources.FileBloomIndex.excludedFiles(
+          graft.sources.FileBloomIndex.read(spark, entry.bloomRoot), keys)
+        .collect().map(r => canon(r.getString(0))).toSet
     } catch {
       case e: Exception =>
-        logWarning(s"graft stats pruning skipped for ${entry.dataDir}: $e")
+        logWarning(s"graft bloom pruning skipped for ${entry.bloomRoot}: $e")
         Set.empty
-    } finally StatsPruneRule.inMetadataQuery.set(false)
+    } finally inMetadataQuery.set(false)
   }
-
 }

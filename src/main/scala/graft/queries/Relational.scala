@@ -514,96 +514,65 @@ object Relational extends QueryModule {
       .orderBy(col("purchase_id"))
   }
 
-  /** Data-skipping scan through file-level stats
-    * ([[graft.sources.FileStats]]): events are laid out range-
-    * partitioned by day (the [[graft.sinks.ParquetSink]] layout-writer
-    * shape), per-file min/max stats are collected in one grouped scan,
-    * and a 4-of-30-day range query reads ONLY the files whose envelope
-    * intersects the range — at 100 TB the open-file count, not just
-    * the row filter, is what drops. Pruning is sound (a file is
-    * dropped only when every row provably misses), so the oracle is
-    * the plain row filter over the raw table; OperatorsSpec asserts
-    * the skip actually happens. */
-  def qPrunedScan(spark: SparkSession, dir: String): DataFrame = {
-    val lay = graft.util.Scratch.dir("pruned_scan")
-    Tables.events(spark, dir)
-      .withColumn("d", to_date(col("ts")))
-      .repartitionByRange(8, col("d"))
-      .write.mode("overwrite").parquet(lay)
-    val stats = graft.sources.FileStats.collect(spark, lay, Seq("d"))
-    graft.sources.FileStats.readRange(spark, stats, "d",
-        lit(java.sql.Date.valueOf("2024-01-10")),
-        lit(java.sql.Date.valueOf("2024-01-13")))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .orderBy(col("event_type"))
-  }
+  /** Data-skipping scan through the manifest's per-file envelopes:
+    * events land in a [[graft.sinks.ManifestTable]] range-partitioned
+    * by day (tracking `d`), and a 4-of-30-day range query through
+    * `format("graft")` opens ONLY the files whose envelope intersects
+    * the range — at 100 TB the open-file count, not just the row
+    * filter, is what drops. Pruning is sound (a file is dropped only
+    * when every row provably misses), so the oracle is the plain row
+    * filter over the raw table; PlanSpec asserts the skip happens. */
+  def qPrunedScan(spark: SparkSession, dir: String): DataFrame =
+    dayRangeScan(spark, dir, "pruned_scan", "2024-01-10", "2024-01-13")
 
-  /** PLANNER-integrated data skipping (plans.StatsPruneRule): same
-    * layout and stats as [[qPrunedScan]], but the query itself is a
-    * PLAIN `spark.read.parquet(dir).filter(...)` — no readRange
-    * opt-in. The one-time [[graft.plans.GraftTables.register]] call
-    * is the table's metadata registration (the Delta/Iceberg
-    * ergonomics); the injected optimizer rule consults the committed
-    * stats epoch at planning time and swaps in a pruned file index.
-    * The oracle is the plain row filter — pruning must be invisible
-    * in results; PlanSpec asserts the file skip actually happens. */
-  def qPlannerPruned(spark: SparkSession, dir: String): DataFrame = {
-    val lay = graft.util.Scratch.dir("planner_pruned")
-    Tables.events(spark, dir)
-      .withColumn("d", to_date(col("ts")))
-      .repartitionByRange(8, col("d"))
-      .write.mode("overwrite").parquet(lay)
-    val root = graft.util.Scratch.dir("planner_pruned_meta") + "/stats"
-    // full rebuild — the layout re-lands under fresh names per
-    // invocation, so the epoch must REPLACE (the q_bloom_lookup lesson)
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, lay, Seq("d")), root)
-    graft.plans.GraftTables.register(lay,
-      statsRoot = Some(root), statsCols = Seq("d"))
-    spark.read.parquet(lay)
+  /** [[qPrunedScan]] over a different window: the same plain
+    * `format("graft").load(root).filter(...)` — no opt-in, no
+    * registration; the manifest envelopes ARE the stats. */
+  def qPlannerPruned(spark: SparkSession, dir: String): DataFrame =
+    dayRangeScan(spark, dir, "planner_pruned", "2024-01-20", "2024-01-24")
+
+  private def dayRangeScan(spark: SparkSession, dir: String, name: String,
+                           lo: String, hi: String): DataFrame = {
+    val root = graft.util.Scratch.freshDir(name) + "/t"
+    graft.sinks.ManifestTable.create(
+      Tables.events(spark, dir)
+        .withColumn("d", to_date(col("ts")))
+        .repartitionByRange(8, col("d")),
+      root, Seq("d"))
+    spark.read.format("graft").load(root)
       .filter(col("d").between(
-        lit(java.sql.Date.valueOf("2024-01-20")),
-        lit(java.sql.Date.valueOf("2024-01-24"))))
+        lit(java.sql.Date.valueOf(lo)), lit(java.sql.Date.valueOf(hi))))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .orderBy(col("event_type"))
   }
 
-  /** Planner-integrated pruning over an N-COLUMN Hilbert-clustered
-    * layout ([[graft.sinks.ParquetSink.writeZOrdered]]): the layout
-    * writer bounds every file's envelope on ALL THREE clustering
-    * columns, so a 3-D box predicate through the registered stats
-    * epoch prunes files on each conjunct at once — the end-to-end
-    * composition of the curve layout, footerable per-file stats, and
-    * the optimizer rule, with a plain `spark.read.parquet(...).filter`
-    * as the whole user surface. Oracle: the identical row filter in
-    * SQL (pruning must never change results — only skip files the
-    * stats PROVE unmatching). PlanSpec asserts the scan opens fewer
-    * files than the directory holds on every one of the three
-    * single-conjunct probes. */
+  /** Manifest pruning over an N-COLUMN Hilbert-clustered layout
+    * ([[graft.sinks.ParquetSink.clusterByCurve]]): the curve bounds
+    * every file's envelope on ALL THREE clustering columns, so a 3-D
+    * box predicate prunes files on each conjunct at once — the
+    * end-to-end composition of the curve layout, footer stats in the
+    * manifest, and the scan's envelope proofs, with a plain
+    * `format("graft").load(root).filter` as the whole user surface.
+    * Oracle: the identical row filter in SQL (pruning must never
+    * change results — only skip files the stats PROVE unmatching).
+    * PlanSpec asserts the scan opens fewer files than the table
+    * holds. */
   def qPlannerPrunedHilbert(spark: SparkSession, dir: String): DataFrame = {
-    val lay = graft.util.Scratch.dir("planner_hilbert")
+    val root = graft.util.Scratch.freshDir("planner_hilbert") + "/t"
+    val dims = Seq("t", "user_id", "cents")
     val ev = Tables.events(spark, dir)
       .withColumn("t", unix_micros(col("ts")))
       .withColumn("cents", round(col("value") * 100, 0).cast("long"))
       .select("event_id", "event_type", "user_id", "t", "cents", "value")
-    graft.sinks.ParquetSink.writeZOrdered(
-      ev, lay, Seq("t", "user_id", "cents"), numFiles = 24, bits = 0)
-    val root = graft.util.Scratch.dir("planner_hilbert_meta") + "/stats"
-    // full rebuild — the layout re-lands under fresh file names per
-    // invocation, so the stats epoch must REPLACE, never merge
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, lay,
-        Seq("t", "user_id", "cents")), root)
-    graft.plans.GraftTables.register(lay,
-      statsRoot = Some(root), statsCols = Seq("t", "user_id", "cents"))
+    graft.sinks.ManifestTable.create(
+      graft.sinks.ParquetSink.clusterByCurve(ev, dims, 24), root, dims)
     // the box must be non-empty at EVERY sf: the feed starts 2024-01-01
     // at all scales, and user ids start at 0 (sf0.001 has only 0..14),
     // so t anchors at the feed's start and user_id is an edge probe
     def us(d: String): Long = java.time.LocalDate.parse(d).atStartOfDay
       .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-    spark.read.parquet(lay)
+    spark.read.format("graft").load(root)
       .filter(col("t").between(us("2024-01-01"), us("2024-01-02")) &&
         col("user_id") <= 10 && col("cents").between(100, 20000))
       .groupBy(col("event_type"))
@@ -637,26 +606,21 @@ object Relational extends QueryModule {
     * hash layout so several files hold one and the rest prove absence. */
   val BloomLookupKeys = Seq(7L, 123L, 321L, 444L)
 
-  /** Bloom-indexed point lookup (sources.FileBloomIndex): the corpus is
-    * laid out hash-partitioned on doc_id (the layout where min/max
-    * envelopes prune NOTHING — every file spans the id range), a
-    * per-file Bloom index is built and committed, and the probe opens
-    * only files whose bloom admits a key. The oracle is the plain
-    * row filter — pruning must be invisible in results. */
+  /** Bloom-indexed point lookup ([[graft.sinks.ManifestTable.buildBloom]]):
+    * the corpus lands hash-partitioned on doc_id (the layout where
+    * min/max envelopes prune NOTHING — every file spans the id range),
+    * a per-file Bloom index is built beside the table, and the
+    * `format("graft")` probe opens only files whose bloom admits a
+    * key. The oracle is the plain row filter — pruning must be
+    * invisible in results. */
   def qBloomLookup(spark: SparkSession, dir: String): DataFrame = {
-    val lay = graft.util.Scratch.dir("bloom_lookup")
-    Tables.documents(spark, dir)
-      .repartition(8, col("doc_id"))
-      .write.mode("overwrite").parquet(lay)
-    val root = graft.util.Scratch.dir("bloom_lookup_idx") + "/index"
-    // commitFull, not a merge: the layout above re-lands under fresh
-    // part names every invocation, so a merged epoch would keep rows
-    // for the previous pass's deleted files and readKeys would fail
-    graft.sources.FileBloomIndex.commitFull(
-      graft.sources.FileBloomIndex.build(spark, lay, "doc_id"), root)
-    graft.sources.FileBloomIndex.readKeys(spark,
-        graft.sources.FileBloomIndex.read(spark, root), "doc_id",
-        BloomLookupKeys.map(lit(_)))
+    val root = graft.util.Scratch.freshDir("bloom_lookup") + "/t"
+    graft.sinks.ManifestTable.create(
+      Tables.documents(spark, dir).repartition(8, col("doc_id")),
+      root, Seq("doc_id"))
+    graft.sinks.ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+    spark.read.format("graft").load(root)
+      .filter(col("doc_id").isin(BloomLookupKeys: _*))
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy(col("doc_id"))
   }
@@ -799,47 +763,35 @@ object Relational extends QueryModule {
       .orderBy(col("rule"))
   }
 
-  /** Metadata-only table aggregates ([[graft.sources.FileStats
-    * .tableSummary]]): COUNT(*)/MIN/MAX/null-count answered from the
-    * committed |files|-row stats epoch with ZERO data I/O — the
-    * Iceberg/Delta manifest-count ergonomics. The oracle computes the
-    * same aggregates the expensive way (a full scan), pinning
-    * exactness of the metadata path. Stats epoch REPLACED per
-    * invocation (the layout re-lands under fresh names — the
-    * q_bloom_lookup lesson). */
+  /** Metadata-only table aggregates: COUNT(*)/MIN/MAX/null-count
+    * folded from a [[graft.sinks.ManifestTable]]'s manifest rows — one
+    * row per file, committed atomically with the version — with ZERO
+    * data I/O, the Iceberg/Delta manifest-count ergonomics. The
+    * oracle computes the same aggregates the expensive way (a full
+    * scan), pinning exactness of the metadata path. */
   def qMetaSummary(spark: SparkSession, dir: String): DataFrame = {
-    val lay = graft.util.Scratch.dir("meta_summary")
-    Tables.lineitem(spark, dir).repartition(8)
-      .write.mode("overwrite").parquet(lay)
-    val root = graft.util.Scratch.dir("meta_summary_meta") + "/stats"
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, lay,
-        Seq("l_orderkey", "l_quantity")), root)
-    graft.sources.FileStats.tableSummary(
-      graft.sources.FileStats.readStats(spark, root),
-      Seq("l_orderkey", "l_quantity"))
+    val cols = Seq("l_orderkey", "l_quantity")
+    val root = lineitemTable(spark, dir, "meta_summary", cols)
+    val aggs = sum(col("row_count")).as("row_count") +: cols.flatMap { c =>
+      Seq(min(col(s"${c}_min")).as(s"${c}_min"),
+        max(col(s"${c}_max")).as(s"${c}_max"),
+        sum(col(s"${c}_nulls")).as(s"${c}_nulls"))
+    }
+    graft.sinks.ManifestTable.manifest(spark, root,
+        graft.sinks.ManifestTable.latestVersion(spark, root))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** PLANNER-integrated metadata aggregates (plans.MetaAggRule): the
-    * query is a plain `spark.read.parquet(dir).agg(count/min/max)` —
-    * no tableSummary opt-in — and the injected rule collapses it to
-    * the committed stats epoch's answer at optimization time (zero
-    * data I/O; PlanSpec asserts the scan is gone). The oracle computes
-    * the same aggregates the expensive way; the rewrite fires only on
-    * proof that the stats cover the scan's exact live file set. */
+    * query is a plain `format("graft").load(root).agg(count/min/max)`
+    * and the injected rule collapses it to the manifest's answer at
+    * optimization time (zero data I/O; PlanSpec asserts the scan is
+    * gone). The oracle computes the same aggregates the expensive
+    * way. */
   def qMetaCount(spark: SparkSession, dir: String): DataFrame = {
-    val lay = graft.util.Scratch.dir("meta_count")
-    Tables.lineitem(spark, dir).repartition(8)
-      .write.mode("overwrite").parquet(lay)
-    val root = graft.util.Scratch.dir("meta_count_meta") + "/stats"
-    // full rebuild — the layout re-lands under fresh names per
-    // invocation, so the stats epoch must REPLACE, never merge
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, lay,
-        Seq("l_orderkey", "l_quantity")), root)
-    graft.plans.GraftTables.register(lay,
-      statsRoot = Some(root), statsCols = Seq("l_orderkey", "l_quantity"))
-    spark.read.parquet(lay).agg(
+    val root = lineitemTable(spark, dir, "meta_count",
+      Seq("l_orderkey", "l_quantity"))
+    spark.read.format("graft").load(root).agg(
       count(lit(1)).as("n_rows"),
       count(col("l_quantity")).as("n_qty"),
       min(col("l_orderkey")).as("k_min"),
@@ -848,29 +800,31 @@ object Relational extends QueryModule {
       max(col("l_quantity")).as("q_max"))
   }
 
+  private def lineitemTable(spark: SparkSession, dir: String, name: String,
+                            statsCols: Seq[String]): String = {
+    val root = graft.util.Scratch.freshDir(name) + "/t"
+    graft.sinks.ManifestTable.create(
+      Tables.lineitem(spark, dir).repartition(8), root, statsCols)
+    root
+  }
+
   /** The DataSourceV2 table format ([[graft.sources.v2
-    * .GraftTableProvider]]): a versioned table written through the
-    * epoch commit protocol, a row-level DELETE folded in, then read
-    * back with `spark.read.format("graft")` — the scan resolves the
-    * current epoch snapshot and prunes files against the committed
-    * stats epoch INSIDE the source (no session extension, no
-    * registration). Oracle: the delete + filter replayed in SQL —
-    * epoch resolution and pruning must be invisible in results. */
+    * .GraftTableProvider]]): a manifest table created, a row-level
+    * DELETE folded in, old versions vacuumed, then read back with
+    * `spark.read.format("graft")` — the scan resolves the current
+    * version's manifest and prunes files against its envelopes INSIDE
+    * the source (no session extension, no registration). Oracle: the
+    * delete + filter replayed in SQL — version resolution and pruning
+    * must be invisible in results. */
   def qGraftScan(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.util.Scratch.dir("graft_dsv2") + "/docs"
-    graft.sinks.VersionedTable.write(
-      Tables.documents(spark, dir).repartitionByRange(4, col("doc_id")), root)
-    graft.sinks.VersionedTable.deleteWhere(spark, root,
+    val root = graft.util.Scratch.freshDir("graft_dsv2") + "/docs"
+    graft.sinks.ManifestTable.create(
+      Tables.documents(spark, dir).repartitionByRange(4, col("doc_id")),
+      root, Seq("doc_id"))
+    graft.sinks.ManifestTable.deleteWhere(spark, root,
       col("lang") === lit("en"))
-    graft.sinks.VersionedTable.vacuum(spark, root, keep = 2)
-    val statsRoot = graft.util.Scratch.dir("graft_dsv2_meta") + "/stats"
-    val v = graft.sinks.VersionedTable.latestVersion(spark, root)
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, s"$root/epoch=$v",
-        Seq("doc_id")), statsRoot)
-    spark.read.format("graft")
-      .option("statsRoot", statsRoot).option("statsCols", "doc_id")
-      .load(root)
+    graft.sinks.ManifestTable.vacuum(spark, root, keep = 2)
+    spark.read.format("graft").load(root)
       .filter(col("doc_id") < 200)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))

@@ -32,11 +32,11 @@ import org.apache.spark.sql.types.StructType
   *     inside each manifest epoch (atomic with it), so empty tables
   *     and column order survive.
   *
-  * The manifest rows are deliberately the [[graft.sources.FileStats]]
-  * shape: the stats ARE the manifest, one commit, never out of sync
-  * with the file list — the coverage-proof dance the external stats
-  * epochs need ([[graft.plans.MetaAggRule]]) is structural here. The
-  * same envelope-proof engine
+  * The manifest rows carry per-file column statistics
+  * ([[graft.sources.FooterStats]]): the stats ARE the manifest, one
+  * commit, never out of sync with the file list, so metadata-only
+  * aggregates ([[graft.plans.MetaAggRule]]) need no coverage proof.
+  * The same envelope-proof engine
   * ([[graft.plans.StatsPruneRule.excludedByEnvelopes]]) that prunes
   * reads decides which files a MERGE/DELETE/CDC batch must rewrite.
   *
@@ -902,6 +902,10 @@ object ManifestTable {
         StructField("bucket", LongType))
   }
 
+  /** File-count bound under which a landing folds its footers on the
+    * driver instead of through the distributed footer job. */
+  private val LocalFooterMaxFiles = 64
+
   private def landFiles(df: DataFrame, root: String,
                         stats: Seq[String],
                         bucketAs: Option[Option[(String, Int)]] = None,
@@ -969,7 +973,7 @@ object ManifestTable {
     val footersOk = stats.nonEmpty &&
       stats.forall(c => graft.sources.FooterStats.supported(df.schema(c).dataType))
     // DRIVER-SIDE landing-row assembly for small landings: under the
-    // (conf'able) file-count bound the footer reads are a few KB each —
+    // file-count bound the footer reads are a few KB each —
     // far below the scheduling cost of the footer job + the broadcast
     // join of the distributed path (measured: one job + one broadcast
     // build per commit, across every table-format query). The result is
@@ -978,8 +982,6 @@ object ManifestTable {
     // manifestSchema shape (the empty-landing return already commits
     // through it). Above the bound — a real cluster commit landing
     // thousands of files — the distributed path is untouched.
-    val localFooterMax = spark.conf.getOption(
-      "spark.graft.landing.localFooterMaxFiles").map(_.toInt).getOrElse(64)
     // ONE collect of (path, size) serves both footer branches (the
     // listing is a LocalRelation, but collecting it three times was
     // still redundant work per commit)
@@ -987,7 +989,7 @@ object ManifestTable {
       sizes.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     if (footersOk) {
       val files = sizeByPath.keys.toSeq.sorted
-      if (files.size <= localFooterMax) {
+      if (files.size <= LocalFooterMaxFiles) {
         val colTypes = stats.map(c => c -> df.schema(c).dataType)
         val hconf = spark.sparkContext.hadoopConfiguration
         val bucketOf: String => Any = bucket match {
@@ -1013,12 +1015,9 @@ object ManifestTable {
     }
     val collected =
       if (footersOk)
-        graft.sources.FileStats.collectFooters(spark,
+        graft.sources.FooterStats.collectFooters(spark,
           sizeByPath.keys.toSeq.sorted, df.schema, stats)
-      else if (stats.isEmpty)
-        spark.read.parquet(dir).groupBy(input_file_name().as("path"))
-          .agg(count(lit(1)).as("row_count"))
-      else graft.sources.FileStats.collect(spark, dir, stats)
+      else graft.sources.FooterStats.scanStats(spark.read.parquet(dir), stats)
     // canonical path identity on both sides (listFiles emits
     // toUri.getPath; input_file_name emits a scheme'd URI; footer rows
     // carry the listing's own paths) — [[canonPathCol]]: a mismatch

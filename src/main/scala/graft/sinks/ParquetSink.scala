@@ -156,9 +156,9 @@ object ParquetSink {
     * interleave is an explicit OR-chain over bit positions — n·bits
     * two-op terms, every one a codegen'd long intrinsic; for the
     * supported bound n·bits ≤ 62 that is at most ~60 terms, well
-    * inside one whole-stage-codegen expression. The multi-column
-    * pruning reader ([[graft.sources.FileStats.candidateFilesAll]])
-    * already consumes any number of per-file envelopes, so this
+    * inside one whole-stage-codegen expression. The manifest scan's
+    * envelope proofs ([[graft.plans.StatsPruneRule.excludedByEnvelopes]])
+    * already consume any number of per-file envelopes, so this
     * closes the writer/reader asymmetry: box queries over n
     * dimensions prune files on every predicate column at once. */
   def zValueN(dims: Seq[(Column, Long, Long)], bits: Int): Column = {
@@ -299,11 +299,9 @@ object ParquetSink {
     * old→aside and tmp→into-place, each rename CHECKED, with the
     * aside restored if the second rename fails — committed rows can
     * never be stranded invisible. Readers in the two-rename window see
-    * the directory absent, never torn. After the swap, run
-    * [[graft.sources.MetadataMaintenance.tick]]: it delta-indexes the
-    * new files and reconciles away the dead paths, so a registered
-    * table resumes pruning without a stale-metadata window crashing or
-    * (worse) silently keeping everything. */
+    * the directory absent, never torn. A manifest table re-clusters
+    * in one commit instead ([[ManifestTable.optimize]] /
+    * [[ManifestTable.optimizeIncremental]]). */
   def reclusterTable(spark: SparkSession, path: String, cols: Seq[String],
                      numFiles: Int, bits: Int = 0): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
@@ -323,98 +321,6 @@ object ParquetSink {
            else s" AND COULD NOT RESTORE $old — manual recovery needed"))
     }
     fs.delete(old, true): Unit
-  }
-
-  /** What one [[reclusterIncremental]] pass did. */
-  final case class ReclusterReport(rewrittenFiles: Int, keptFiles: Int,
-                                   rewrittenRows: Long, newFiles: Int)
-
-  /** INCREMENTAL curve optimize — the 100 TB form of
-    * [[reclusterTable]]: rewrite ONLY the degraded files, cost ∝ the
-    * degraded subset, never the table. Selection is metadata-only,
-    * from the committed per-file stats epoch (run a
-    * MetadataMaintenance tick first so appends are indexed): a file
-    * whose per-dimension envelope geomean exceeds `wideFactor` × the
-    * MEDIAN file score is an offender. The median — not an absolute
-    * bound like the ideal tile extent — because envelopes are
-    * measured in domain units, and on a long-tailed column a sampled
-    * append's extent looks deceptively modest (its max lands mid-
-    * tail) while the curve files' equi-depth tiles look tiny; the
-    * population's median self-calibrates both effects away. On a
-    * majority-degraded table the median itself is wide and nothing
-    * qualifies — that table needs [[reclusterTable]], not an
-    * incremental pass. Offenders are read back, re-clustered among
-    * themselves at the table's existing file grain, and swapped in:
-    * new files land complete in a hidden temp dir, offenders move to
-    * an aside dir, new files move in, aside deleted — per-file
-    * renames, so (as with [[compactTable]]) a reader in the window
-    * may briefly miss the rewritten rows, never see them doubled or
-    * torn. Follow with another tick to index the new files and drop
-    * the dead paths. Stale stats rows (paths no longer live) are
-    * ignored — they select nothing. */
-  def reclusterIncremental(spark: SparkSession, dir: String,
-                           cols: Seq[String], statsRoot: String,
-                           wideFactor: Double = 2.0): ReclusterReport = {
-    require(cols.size >= 2, "reclusterIncremental needs >= 2 clustering columns")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = graft.sinks.VersionedTable.read(spark, statsRoot)
-      .select(col("path") +: col("row_count") +:
-        cols.flatMap(c => Seq(col(s"${c}_min").cast("double"),
-          col(s"${c}_max").cast("double"))): _*)
-      .collect()
-      .map { r =>
-        (r.getString(0), r.getLong(1),
-          cols.indices.map(i => (r.getDouble(2 + 2 * i), r.getDouble(3 + 2 * i))))
-      }
-      // liveness: a stats row for a deleted path must select nothing
-      .filter { case (p, _, _) =>
-        fs.exists(new org.apache.hadoop.fs.Path(new java.net.URI(p).getPath)) }
-    if (stats.length < 2)
-      return ReclusterReport(0, stats.length, 0L, 0)
-    val spans = cols.indices.map { i =>
-      val lo = stats.map(_._3(i)._1).min
-      val hi = stats.map(_._3(i)._2).max
-      math.max(hi - lo, 1e-12)
-    }
-    def score(env: Seq[(Double, Double)]): Double =
-      math.pow(cols.indices.map(i =>
-        math.max((env(i)._2 - env(i)._1) / spans(i), 1e-12)).product,
-        1.0 / cols.size)
-    val scores = stats.map { case (_, _, env) => score(env) }.sorted
-    val median = scores(scores.length / 2)
-    val (offenders, kept) =
-      stats.partition { case (_, _, env) => score(env) > wideFactor * median }
-    if (offenders.isEmpty)
-      return ReclusterReport(0, kept.length, 0L, 0)
-    val offRows = offenders.map(_._2).sum
-    val grain = math.max(1L, stats.map(_._2).sum / stats.length)
-    val nNew = math.max(1L, (offRows + grain - 1) / grain).toInt
-    val offPaths = offenders.map(_._1)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      root.getParent, "." + root.getName + ".recl-inc-tmp")
-    val aside = new org.apache.hadoop.fs.Path(
-      root.getParent, "." + root.getName + ".recl-inc-old")
-    writeZOrdered(spark.read.parquet(offPaths: _*), tmp.toString, cols, nNew,
-      bits = 0)
-    fs.mkdirs(aside): Unit
-    offPaths.foreach { p =>
-      val src = new org.apache.hadoop.fs.Path(new java.net.URI(p).getPath)
-      require(fs.rename(src, new org.apache.hadoop.fs.Path(aside, src.getName)),
-        s"reclusterIncremental: failed to set aside $src")
-    }
-    val moved = fs.listStatus(tmp).filter(s => s.isFile &&
-      s.getPath.getName.endsWith(".parquet"))
-    moved.foreach { s =>
-      require(fs.rename(s.getPath,
-        new org.apache.hadoop.fs.Path(root, s.getPath.getName)),
-        s"reclusterIncremental: failed to move ${s.getPath} into $dir — " +
-          s"offender files preserved in $aside for manual recovery")
-    }
-    fs.delete(aside, true): Unit
-    fs.delete(tmp, true): Unit
-    ReclusterReport(offenders.length, kept.length, offRows, moved.length)
   }
 
   private def writeByKey(df: DataFrame, path: String, key: Column,

@@ -176,9 +176,7 @@ object VersionedTable {
     * measured as the second-largest job population of the
     * table-format query family). Distributed plans and anything
     * larger stage through the ordinary Spark write unchanged. */
-  private def localStageMaxRows(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.commit.localStageMaxRows")
-      .map(_.toInt).getOrElse(65536)
+  private val LocalStageMaxRows = 65536
 
   private def stageEpoch(df: DataFrame, root: String,
                          stage: String => Unit): org.apache.hadoop.fs.Path = {
@@ -187,7 +185,7 @@ object VersionedTable {
     val wroteLocal =
       try {
         LocalEpoch.localRows(df.queryExecution.optimizedPlan,
-          localStageMaxRows(spark)) match {
+          LocalStageMaxRows) match {
           case Some(rows)
               // names/types must survive optimization unchanged (they
               // do for the metadata frames; anything surprising falls

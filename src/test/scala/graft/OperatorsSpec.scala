@@ -1760,129 +1760,133 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("file stats: range pruning skips files, returns exactly the filtered rows") {
-    import sources.FileStats
-    val lay = util.Scratch.dir("filestats_layout")
-    sources.Tables.events(spark, TestSpark.sf)
-      .withColumn("d", to_date(col("ts")))
-      .repartitionByRange(8, col("d"))
-      .write.mode("overwrite").parquet(lay)
-    val stats = FileStats.collect(spark, lay, Seq("d")).cache()
-    val total = stats.count()
+    val root = util.Scratch.freshDir("filestats_layout") + "/t"
+    sinks.ManifestTable.create(
+      sources.Tables.events(spark, TestSpark.sf)
+        .withColumn("d", to_date(col("ts")))
+        .repartitionByRange(8, col("d")),
+      root, Seq("d"))
+    val total = sinks.ManifestTable.filesAt(spark, root, 0).size
     assert(total >= 4, s"range layout should produce several files, got $total")
     val lo = lit(java.sql.Date.valueOf("2024-01-10"))
     val hi = lit(java.sql.Date.valueOf("2024-01-13"))
-    val kept = FileStats.candidateFiles(stats, "d", lo, hi).count()
+    val probe = spark.read.format("graft").load(root)
+      .filter(col("d").between(lo, hi))
+    val kept = plannedDataFiles(probe)
     assert(kept < total,
       s"a 4-of-30-day range must skip files on a day-ranged layout ($kept/$total kept)")
-    val got = FileStats.readRange(spark, stats, "d", lo, hi)
-      .select("event_id").as[Long].collect().toSet
-    val want = spark.read.parquet(lay).filter(col("d").between(lo, hi))
+    val got = probe.select("event_id").as[Long].collect().toSet
+    val want = sources.Tables.events(spark, TestSpark.sf)
+      .filter(to_date(col("ts")).between(lo, hi))
       .select("event_id").as[Long].collect().toSet
     assert(got == want, "pruned read must equal the plain filtered scan")
     assert(want.nonEmpty)
-    stats.unpersist()
   }
 
   test("file stats: all-null files are pruned soundly; incremental epochs equal one-shot") {
-    import sources.FileStats
-    val lay = util.Scratch.dir("filestats_nulls")
-    // partition 0 of the range layout holds the nulls; a range predicate
-    // rejects NULL, so dropping that file loses nothing
-    Seq[(Long, Option[Int])](1L -> None, 2L -> None, 3L -> Some(10),
+    // range-partitioned on id: ids 1 and 2 share the file whose v is
+    // all NULL; a range predicate rejects NULL, so dropping it loses
+    // nothing
+    val rows = Seq[(Long, Option[Int])](1L -> None, 2L -> None, 3L -> Some(10),
         4L -> Some(20), 5L -> Some(30), 6L -> Some(40))
       .toDF("id", "v")
-      .repartitionByRange(3, col("v"))
-      .write.mode("overwrite").parquet(lay)
-    val stats = FileStats.collect(spark, lay, Seq("v"))
-    val got = FileStats.readRange(spark, stats, "v", lit(0), lit(100))
-      .select("id").as[Long].collect().toSet
-    assert(got == Set(3L, 4L, 5L, 6L),
+    val root = util.Scratch.freshDir("filestats_nulls") + "/t"
+    sinks.ManifestTable.create(rows.repartitionByRange(3, col("id")), root,
+      Seq("id", "v"))
+    val oneShot = sinks.ManifestTable.manifest(spark, root, 0)
+    assert(oneShot.filter(col("v_nulls") === col("row_count")).count() == 1,
+      "the layout must hold exactly one all-NULL file")
+    val probe = spark.read.format("graft").load(root)
+      .filter(col("v").between(0, 100))
+    assert(probe.select("id").as[Long].collect().toSet == Set(3L, 4L, 5L, 6L),
       "whole-domain range must return every non-null row and no null row")
-    // incremental maintenance: stats committed file-batch by file-batch
-    // through the versioned table equal the one-shot collect
-    val root = util.Scratch.dir("filestats_epochs")
-    val files = new java.io.File(lay).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-    assert(files.length >= 2)
-    val (b1, b2) = files.splitAt(1)
-    FileStats.commitStats(FileStats.collectFor(spark, b1.toSeq, Seq("v")), root)
-    FileStats.commitStats(FileStats.collectFor(spark, b2.toSeq, Seq("v")), root)
-    val folded = FileStats.readStats(spark, root)
-      .orderBy("path").collect().toSeq
-    val oneShot = FileStats.collect(spark, lay, Seq("v"))
-      .orderBy("path").collect().toSeq
-    assert(folded == oneShot, "epoch-folded stats must equal the one-shot scan")
+    assert(plannedDataFiles(probe) == 2, "the all-NULL file must be proven out")
+    // incremental maintenance: the same files landed one commit at a
+    // time carry the same per-file stats as the one-shot landing
+    val inc = util.Scratch.freshDir("filestats_epochs") + "/t"
+    val batches = Seq((1L, 2L), (3L, 4L), (5L, 6L)).map { case (a, b) =>
+      rows.filter(col("id").between(a, b)).coalesce(1) }
+    sinks.ManifestTable.create(batches.head, inc, Seq("id", "v"))
+    batches.tail.foreach(b => sinks.ManifestTable.write(b, inc): Unit)
+    def statRows(df: org.apache.spark.sql.DataFrame) = df
+      .select("row_count", "id_min", "id_max", "id_nulls",
+        "v_min", "v_max", "v_nulls")
+      .orderBy("id_min").collect().toSeq
+    val folded = sinks.ManifestTable.manifest(spark, inc,
+      sinks.ManifestTable.latestVersion(spark, inc))
+    assert(statRows(folded) == statRows(oneShot),
+      "commit-by-commit stats must equal the one-shot landing")
   }
 
   test("footer stats equal scan stats across every supported type; pruning agrees") {
-    import sources.FileStats
-    val lay = util.Scratch.dir("footerstats_layout")
-    sources.Tables.events(spark, TestSpark.sf)
+    val cols = Seq("d", "ts", "event_id", "event_type", "value", "flag")
+    val ev = sources.Tables.events(spark, TestSpark.sf)
       .withColumn("d", to_date(col("ts")))
       .withColumn("flag", col("event_id") % 2 === 0)
-      .repartitionByRange(6, col("d"))
-      .write.mode("overwrite").parquet(lay)
-    val cols = Seq("d", "ts", "event_id", "event_type", "value", "flag")
-    val schema = spark.read.parquet(lay).schema
-    val files = new java.io.File(lay).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
-    def normalized(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map { r =>
-        val raw = r.getString(r.fieldIndex("path"))
+    def normalized(df: org.apache.spark.sql.DataFrame) = df
+      .select("path", ("row_count" +: cols.flatMap(c =>
+        Seq(s"${c}_min", s"${c}_max", s"${c}_nulls"))): _*)
+      .collect().map { r =>
+        val raw = r.getString(0)
         val p = if (raw.contains(":/")) new java.net.URI(raw).getPath else raw
         p -> r.toSeq.drop(1)
       }.sortBy(_._1).toSeq
-    val fromFooters = normalized(
-      FileStats.collectFooters(spark, files, schema, cols)
-        .select("path", FileStats.collect(spark, lay, cols).columns.drop(1): _*))
-    val fromScan = normalized(FileStats.collect(spark, lay, cols))
-    assert(fromFooters.map(_._1) == fromScan.map(_._1))
-    fromFooters.zip(fromScan).foreach { case ((p, f), (_, s)) =>
-      assert(f == s, s"footer stats diverge from scan stats for $p")
+    // 6 files fold their footers on the driver; 72 (over the landing's
+    // 64-file local bound) go through the distributed footer job — both
+    // must equal an exact scan of the same files
+    for ((name, n) <- Seq("footerstats_local" -> 6, "footerstats_dist" -> 72)) {
+      val root = util.Scratch.freshDir(name) + "/t"
+      sinks.ManifestTable.create(
+        ev.repartitionByRange(n, col("d"), col("event_id")), root, cols)
+      val files = sinks.ManifestTable.filesAt(spark, root, 0)
+      assert((files.size > 64) == (n > 64),
+        s"$name: landed ${files.size} files, wanted the other footer branch")
+      val fromFooters = normalized(sinks.ManifestTable.manifest(spark, root, 0))
+      val fromScan = normalized(sources.FooterStats.scanStats(
+        spark.read.parquet(files: _*), cols))
+      assert(fromFooters.map(_._1) == fromScan.map(_._1))
+      fromFooters.zip(fromScan).foreach { case ((p, f), (_, s)) =>
+        assert(f == s, s"footer stats diverge from scan stats for $p")
+      }
     }
     // and the pruned read through footer-derived stats is still exact
-    val stats = FileStats.collectFooters(spark, files, schema, cols)
     val lo = lit(java.sql.Date.valueOf("2024-01-10"))
     val hi = lit(java.sql.Date.valueOf("2024-01-13"))
-    assert(FileStats.candidateFiles(stats, "d", lo, hi).count() < files.size,
+    val probe = spark.read.format("graft")
+      .load(util.Scratch.dir("footerstats_local") + "/t")
+      .filter(col("d").between(lo, hi))
+    assert(plannedDataFiles(probe) < 6,
       "footer envelopes must skip files on the day-ranged layout")
-    val got = FileStats.readRange(spark, stats, "d", lo, hi)
-      .select("event_id").as[Long].collect().toSet
-    val want = spark.read.parquet(lay).filter(col("d").between(lo, hi))
+    val got = probe.select("event_id").as[Long].collect().toSet
+    val want = ev.filter(col("d").between(lo, hi))
       .select("event_id").as[Long].collect().toSet
     assert(got == want && want.nonEmpty)
   }
 
   test("multi-column pruning on a Z-order layout: 2-D box prunes both dimensions") {
-    import sources.FileStats
-    val lay = util.Scratch.dir("footerstats_zorder")
-    sinks.ParquetSink.writeZOrdered(
-      sources.Tables.events(spark, TestSpark.sf)
-        .select("event_id", "user_id", "value"),
-      lay, "user_id", "event_id", numFiles = 16)
-    val schema = spark.read.parquet(lay).schema
-    val files = new java.io.File(lay).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
-    val stats = FileStats.collectFooters(spark, files, schema,
-      Seq("user_id", "event_id")).cache()
-    val uRange = ("user_id", lit(3L), lit(6L))
-    val eRange = ("event_id", lit(200L), lit(450L))
-    val keptU  = FileStats.candidateFilesAll(stats, Seq(uRange)).count()
-    val keptE  = FileStats.candidateFilesAll(stats, Seq(eRange)).count()
-    val kept2d = FileStats.candidateFilesAll(stats, Seq(uRange, eRange)).count()
+    val root = util.Scratch.freshDir("footerstats_zorder") + "/t"
+    val dims = Seq("user_id", "event_id")
+    val ev = sources.Tables.events(spark, TestSpark.sf)
+      .select("event_id", "user_id", "value")
+    sinks.ManifestTable.create(
+      sinks.ParquetSink.clusterByCurve(ev, dims, 16), root, dims)
+    val total = sinks.ManifestTable.filesAt(spark, root, 0).size
+    val t = spark.read.format("graft").load(root)
+    val uCond = col("user_id").between(3L, 6L)
+    val eCond = col("event_id").between(200L, 450L)
+    val keptU = plannedDataFiles(t.filter(uCond))
+    val keptE = plannedDataFiles(t.filter(eCond))
+    val box = t.filter(uCond && eCond)
+    val kept2d = plannedDataFiles(box)
     assert(kept2d <= keptU && kept2d <= keptE,
       s"conjunction must never keep more than either range ($kept2d vs $keptU/$keptE)")
-    assert(kept2d < files.size && keptU < files.size && keptE < files.size,
-      s"the Z-order layout must bound BOTH dimensions' envelopes " +
-        s"($keptU, $keptE, 2d $kept2d of ${files.size})")
-    val got = FileStats.readWhere(spark, stats, Seq(uRange, eRange))
-      .select("event_id").as[Long].collect().toSet
-    val want = spark.read.parquet(lay)
-      .filter(col("user_id").between(3L, 6L) &&
-        col("event_id").between(200L, 450L))
-      .select("event_id").as[Long].collect().toSet
+    assert(kept2d < total && keptU < total && keptE < total,
+      s"the curve layout must bound BOTH dimensions' envelopes " +
+        s"($keptU, $keptE, 2d $kept2d of $total)")
+    val got = box.select("event_id").as[Long].collect().toSet
+    val want = ev.filter(uCond && eCond).select("event_id").as[Long]
+      .collect().toSet
     assert(got == want && want.nonEmpty)
-    stats.unpersist()
   }
 
   test("expectations: split is a disjoint exact cover; NULL checks quarantine") {
@@ -1911,28 +1915,41 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("footer stats: unknown stats are NULL and pruning keeps the file") {
-    import org.apache.spark.sql.types._
-    import sources.{FileStats, FooterStats}
-    // a decimal column is outside the supported stats types: reject early
-    val lay = util.Scratch.dir("footerstats_reject")
-    Seq((1L, BigDecimal(2)), (2L, BigDecimal(3))).toDF("id", "dec")
-      .write.mode("overwrite").parquet(lay)
-    val schema = spark.read.parquet(lay).schema
-    val files = new java.io.File(lay).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
+    // a decimal column is outside the footer-supported types: the
+    // footer fold rejects it early, and the landing falls back to an
+    // exact scan for it
+    val dec = Seq((1L, BigDecimal(2)), (2L, BigDecimal(3))).toDF("id", "dec")
     intercept[IllegalArgumentException] {
-      FileStats.collectFooters(spark, files, schema, Seq("dec"))
+      sources.FooterStats.collectFooters(spark, Seq("unread"), dec.schema,
+        Seq("dec"))
     }
-    // hand-built "unknown" stats row (writer recorded nothing): the
-    // proof-based filter must KEEP the file — unknown is not absent
-    val unknown = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row("f1", 2L, null, null, null)),
-      StructType(Seq(
-        StructField("path", StringType), StructField("row_count", LongType),
-        StructField("v_min", IntegerType), StructField("v_max", IntegerType),
-        StructField("v_nulls", LongType))))
-    assert(FileStats.candidateFiles(unknown, "v", lit(0), lit(10))
-      .collect().map(_.getString(0)).toSeq == Seq("f1"))
+    val decRoot = util.Scratch.freshDir("footerstats_dec") + "/t"
+    sinks.ManifestTable.create(dec.coalesce(1), decRoot, Seq("dec"))
+    val d = sinks.ManifestTable.manifest(spark, decRoot, 0).collect()(0)
+    assert(d.getDecimal(d.fieldIndex("dec_min")).intValue == 2 &&
+      d.getDecimal(d.fieldIndex("dec_max")).intValue == 3 &&
+      d.getLong(d.fieldIndex("dec_nulls")) == 0L)
+    // a writer that records NO stats for a column: its cells land as
+    // NULL ("unknown"), never a guess, and pruning must KEEP the file —
+    // unknown is not absent. A separate session scopes the parquet
+    // writer setting to this landing alone
+    val quiet = spark.newSession()
+    quiet.conf.set("parquet.column.statistics.enabled#v", "false")
+    val root = util.Scratch.freshDir("footerstats_unknown") + "/t"
+    sinks.ManifestTable.create(
+      quiet.range(10).select(col("id"), (col("id") * 2).cast("int").as("v"))
+        .coalesce(1),
+      root, Seq("id", "v"))
+    val m = sinks.ManifestTable.manifest(spark, root, 0).collect()(0)
+    assert(Seq("v_min", "v_max", "v_nulls").forall(c => m.isNullAt(m.fieldIndex(c))),
+      s"unrecorded stats must land as NULL: $m")
+    assert(m.getLong(m.fieldIndex("id_max")) == 9L,
+      "recorded columns keep their stats")
+    val t = spark.read.format("graft").load(root)
+    val probe = t.filter(col("v") > 100)
+    assert(plannedDataFiles(probe) == 1, "an unknown envelope must keep the file")
+    assert(probe.count() == 0L)
+    assert(t.filter(col("v") === 4).select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
   test("incremental aggregate view: delta fold == rebuild bit-equal; retraction guards") {
@@ -2048,166 +2065,68 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("manifest-driven maintenance loop: stats and bloom indexes follow landed files incrementally") {
-    import sources.{FileBloomIndex, FileManifest, FileStats}
-    val land = util.Scratch.dir("maint_land")
-    val man = util.Scratch.dir("maint_man") + "/manifest"
-    val statsRoot = util.Scratch.dir("maint_stats") + "/stats"
-    val bloomRoot = util.Scratch.dir("maint_bloom") + "/bloom"
+    import sources.FileBloomIndex
+    val root = util.Scratch.freshDir("maint_table") + "/t"
     val docs = sources.Tables.documents(spark, sf)
-    // one maintenance tick: discover → index ONLY the delta → commit
-    def tick(): Int = {
-      val nf = FileManifest.newFiles(spark, land, man)
-      val files = nf.select("path").collect().map(_.getString(0)).toSeq
-      if (files.nonEmpty) {
-        FileStats.commitStats(
-          FileStats.collectFor(spark, files, Seq("doc_id")), statsRoot)
-        FileBloomIndex.commitDelta(
-          FileBloomIndex.buildFor(spark, files, "doc_id"), bloomRoot)
-        FileManifest.commit(spark, man, nf)
-      }
-      files.size
-    }
-    docs.filter(col("doc_id") < 100).repartition(3)
-      .write.mode("append").parquet(land)
-    val n1 = tick()
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    sinks.ManifestTable.create(docs.filter(col("doc_id") < 100).repartition(3),
+      root, Seq("doc_id"))
+    val bloomRoot = sinks.ManifestTable.bloomRootFor(root, "doc_id")
+    def liveFiles = sinks.ManifestTable.filesAt(spark, root,
+      sinks.ManifestTable.latestVersion(spark, root)).size
+    assert(sinks.ManifestTable.buildBloom(spark, root, "doc_id").nonEmpty)
+    val n1 = liveFiles
     assert(n1 >= 2, "wave 1 should land several files")
-    assert(tick() == 0, "nothing new => nothing re-indexed")
-    docs.filter(col("doc_id") >= 100).repartition(3)
-      .write.mode("append").parquet(land)
-    val n2 = tick()
+    assert(sinks.ManifestTable.buildBloom(spark, root, "doc_id").isEmpty,
+      "nothing new => nothing re-indexed")
+    sinks.ManifestTable.write(docs.filter(col("doc_id") >= 100).repartition(3),
+      root): Unit
+    assert(sinks.ManifestTable.buildBloom(spark, root, "doc_id").nonEmpty)
+    val n2 = liveFiles - n1
     assert(n2 >= 2, "wave 2 indexes only its own files")
-    // the folded metadata covers every live file…
-    assert(FileStats.readStats(spark, statsRoot).count() == n1 + n2)
+    // every live file carries its stats in the manifest and a bloom row…
+    assert(sinks.ManifestTable.manifest(spark, root,
+      sinks.ManifestTable.latestVersion(spark, root)).count() == n1 + n2)
     assert(FileBloomIndex.read(spark, bloomRoot).count() == n1 + n2)
-    // …and pruned reads through it stay exact across both waves
-    val gotRange = FileStats.readRange(spark,
-      FileStats.readStats(spark, statsRoot), "doc_id", lit(90L), lit(110L))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    // …and pruned reads through them stay exact across both waves
+    val t = spark.read.format("graft").load(root)
+    val gotRange = t.filter(col("doc_id").between(90L, 110L))
+      .select("doc_id").as[Long].collect().toSet
     assert(gotRange == (90L to 110L).toSet)
-    val gotKeys = FileBloomIndex.readKeys(spark,
-      FileBloomIndex.read(spark, bloomRoot), "doc_id", Seq(lit(5L), lit(150L)))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val gotKeys = t.filter(col("doc_id").isin(5L, 150L))
+      .select("doc_id").as[Long].collect().toSet
     assert(gotKeys == Set(5L, 150L))
   }
 
   test("file bloom index: point lookup opens only admitted files, never misses the true file") {
     import sources.FileBloomIndex
     val docs = sources.Tables.documents(spark, sf)
-    val lay = util.Scratch.dir("fbi_lay")
-    docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(lay)
-    val idx = FileBloomIndex.build(spark, lay, "doc_id")
-    val total = idx.count()
-    assert(total >= 6, s"hash layout should spread over files, got $total")
-    val cand = FileBloomIndex.candidateFiles(idx, Seq(lit(3L)))
-      .collect().map(_.getString(0)).toSet
-    assert(cand.size < total, "a single-key probe must skip files")
-    val trueFile = spark.read.parquet(lay).filter(col("doc_id") === 3L)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val root = util.Scratch.freshDir("fbi_table") + "/t"
+    sinks.ManifestTable.create(docs.repartition(8, col("doc_id")), root,
+      Seq("doc_id"))
+    val files = sinks.ManifestTable.filesAt(spark, root, 0)
+    assert(files.size >= 6, s"hash layout should spread over files, got ${files.size}")
+    def canon(p: String) = new java.net.URI(p).getPath
+    val excluded = FileBloomIndex.excludedFiles(
+        FileBloomIndex.buildFor(spark, files, "doc_id"), Seq(lit(3L)))
+      .collect().map(r => canon(r.getString(0))).toSet
+    assert(excluded.nonEmpty, "a single-key probe must skip files")
+    val trueFile = spark.read.parquet(files: _*).filter(col("doc_id") === 3L)
       .select(input_file_name()).head().getString(0)
-    assert(cand.contains(trueFile), "no false negatives — ever")
-    // pruned read == plain filter
-    val got = FileBloomIndex.readKeys(spark, idx, "doc_id",
-      Seq(lit(3L), lit(11L))).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val want = spark.read.parquet(lay)
-      .filter(col("doc_id").isin(3L, 11L)).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
+    assert(!excluded.contains(canon(trueFile)), "no false negatives — ever")
+    // the committed index prunes format("graft") probes: pruned read ==
+    // plain filter
+    sinks.ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+    val t = spark.read.format("graft").load(root)
+    val probe = t.filter(col("doc_id").isin(3L, 11L))
+    assert(plannedDataFiles(probe) < files.size)
+    val got = probe.select("doc_id").as[Long].collect().toSet
+    val want = docs.filter(col("doc_id").isin(3L, 11L)).select("doc_id")
+      .as[Long].collect().toSet
     assert(got == want && got.nonEmpty)
-    // a key outside the table reads no rows (usually zero files)
-    assert(FileBloomIndex.readKeys(spark, idx, "doc_id",
-      Seq(lit(99999999L))).count() == 0)
-  }
-
-  test("bloom index: full rebuild after a layout rewrite replaces the epoch — repeat passes stay exact; a stale delta-merge fails with the contract named, reconcile repairs it") {
-    import sources.{FileBloomIndex, FileManifest}
-    val docs = sources.Tables.documents(spark, sf)
-    val lay = util.Scratch.dir("fbi_rw_lay")
-    val root = util.Scratch.dir("fbi_rw_idx") + "/index"
-    // the q_bloom_lookup shape: overwrite re-lands the layout under
-    // FRESH part names, then a full rebuild commits. Two passes in one
-    // JVM — the r7 crash was pass 2 opening pass 1's deleted files,
-    // because the rebuild was merged by path instead of replacing.
-    def pass(): Set[Long] = {
-      docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(lay)
-      FileBloomIndex.commitFull(
-        FileBloomIndex.build(spark, lay, "doc_id"), root)
-      FileBloomIndex.readKeys(spark,
-          FileBloomIndex.read(spark, root), "doc_id", Seq(lit(7L), lit(21L)))
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    }
-    val first = pass()
-    val second = pass()
-    assert(first == Set(7L, 21L) && second == first)
-    // replace semantics: the epoch holds exactly the live files' rows
-    assert(FileBloomIndex.read(spark, root).count() ==
-      FileManifest.listFiles(spark, lay).count())
-    // pin the failure mode commitFull exists to prevent: merging a
-    // rebuild keeps the deleted files' rows, and the read path names
-    // the freshness contract instead of a raw PATH_NOT_FOUND
-    docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(lay)
-    FileBloomIndex.commitDelta(
-      FileBloomIndex.build(spark, lay, "doc_id"), root)
-    val ex = intercept[IllegalStateException] {
-      FileBloomIndex.readKeys(spark,
-        FileBloomIndex.read(spark, root), "doc_id", Seq(lit(7L))).collect()
-    }
-    assert(ex.getMessage.contains("stale") &&
-      ex.getMessage.contains("reconcile"))
-    // reconcile drops the dead rows; reads are exact again, and a
-    // second reconcile on the now-clean index commits nothing
-    assert(FileBloomIndex.reconcile(spark, root, lay).nonEmpty)
-    val repaired = FileBloomIndex.readKeys(spark,
-        FileBloomIndex.read(spark, root), "doc_id", Seq(lit(7L), lit(21L)))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(repaired == Set(7L, 21L))
-    assert(FileBloomIndex.reconcile(spark, root, lay).isEmpty)
-  }
-
-  test("maintenance tick after compaction: new files delta-indexed, dead rows reconciled away, pruned reads exact") {
-    import sources.{FileBloomIndex, FileManifest, FileStats, MetadataMaintenance}
-    val docs = sources.Tables.documents(spark, sf)
-    val land = util.Scratch.dir("maint2_land")
-    val man = util.Scratch.dir("maint2_man") + "/manifest"
-    val statsRoot = util.Scratch.dir("maint2_stats") + "/stats"
-    val bloomRoot = util.Scratch.dir("maint2_bloom") + "/bloom"
-    def tick() = MetadataMaintenance.tick(spark, land, man,
-      statsRoot, Seq("doc_id"), bloomRoot, "doc_id")
-    // land a fragmented partitioned layout (streaming-ingest shape)
-    docs.repartition(6).write.partitionBy("lang").mode("append").parquet(land)
-    val t1 = tick()
-    assert(t1.newFiles >= 6 && t1.statsReconciled.isEmpty &&
-      t1.bloomReconciled.isEmpty)
-    // compaction rewrites fragmented partition dirs under NEW paths
-    graft.sinks.ParquetSink.compactTable(spark, land,
-      maxFilesPerDir = 2, targetFilesPerDir = 1)
-    // before the tick the stats table references dead files — the
-    // read path must refuse, naming the contract, not prune wrongly
-    intercept[IllegalStateException] {
-      FileStats.readRange(spark, FileStats.readStats(spark, statsRoot),
-        "doc_id", lit(0L), lit(10000000L)).collect()
-    }
-    // one tick: compacted files surface as new (fresh paths), dead
-    // rows are reconciled out of both tables
-    val t2 = tick()
-    assert(t2.newFiles >= 1 && t2.statsReconciled.nonEmpty &&
-      t2.bloomReconciled.nonEmpty)
-    val live = FileManifest.listFiles(spark, land).count()
-    assert(FileStats.readStats(spark, statsRoot).count() == live)
-    assert(FileBloomIndex.read(spark, bloomRoot).count() == live)
-    // point and range reads are exact again and open no dead paths
-    val wantRange = docs.filter(col("doc_id").between(40L, 60L))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val gotRange = FileStats.readRange(spark,
-        FileStats.readStats(spark, statsRoot), "doc_id", lit(40L), lit(60L))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(gotRange == wantRange)
-    val gotKeys = FileBloomIndex.readKeys(spark,
-        FileBloomIndex.read(spark, bloomRoot), "doc_id",
-        Seq(lit(5L), lit(42L)))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(gotKeys == Set(5L, 42L))
-    // an idle tick is a no-op everywhere
-    val t3 = tick()
-    assert(t3 == MetadataMaintenance.Tick(0, None, None))
+    // a key outside the table reads no rows
+    assert(t.filter(col("doc_id") === 99999999L).count() == 0)
   }
 
   test("drift: KS hits exact extremes; PSI terms vanish on identical epochs, localize a shift") {
@@ -2957,24 +2876,25 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("table summary from stats epoch: exact count/extrema/nulls with zero data reads") {
-    import sources.FileStats
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-meta-summary").toString
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-meta-summary").toString + "/t"
     val df = Seq[(java.lang.Long, java.lang.Double)](
       (1L, 2.0), (2L, null), (3L, -7.5), (null, 4.0), (5L, 9.25))
       .toDF("k", "v")
-    df.repartition(3).write.mode("overwrite").parquet(s"$dir/t")
-    FileStats.commitStatsFull(
-      FileStats.collect(spark, s"$dir/t", Seq("k", "v")), s"$dir/stats")
-    val got = FileStats.tableSummary(
-      FileStats.readStats(spark, s"$dir/stats"), Seq("k", "v")).collect()(0)
-    assert(got.getLong(got.fieldIndex("row_count")) == 5L)
-    assert(got.getLong(got.fieldIndex("k_min")) == 1L)
-    assert(got.getLong(got.fieldIndex("k_max")) == 5L)
-    assert(got.getLong(got.fieldIndex("k_nulls")) == 1L)
-    assert(got.getDouble(got.fieldIndex("v_min")) == -7.5)
-    assert(got.getDouble(got.fieldIndex("v_max")) == 9.25)
-    assert(got.getLong(got.fieldIndex("v_nulls")) == 1L)
+    sinks.ManifestTable.create(df.repartition(3), root, Seq("k", "v"))
+    // answered from the committed manifest's per-file stats alone
+    val agg = spark.read.format("graft").load(root).agg(
+      count(lit(1)), min(col("k")), max(col("k")), count(col("k")),
+      min(col("v")), max(col("v")), count(col("v")))
+    val phys = agg.queryExecution.executedPlan.toString
+    assert(phys.contains("LocalTableScan") && !phys.contains("BatchScan"),
+      s"the summary must read no data:\n$phys")
+    val got = agg.collect()(0)
+    assert(got.getLong(0) == 5L)
+    assert(got.getLong(1) == 1L && got.getLong(2) == 5L)
+    assert(got.getLong(3) == 4L, "one NULL k")
+    assert(got.getDouble(4) == -7.5 && got.getDouble(5) == 9.25)
+    assert(got.getLong(6) == 4L, "one NULL v")
   }
 
   test("temperature mix: τ=1 is identity; binding domain kept whole; draw is partitioning-proof") {

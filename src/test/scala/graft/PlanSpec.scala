@@ -14,30 +14,6 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
-  /** Distinct data files the physical plan's batch scans would read —
-    * unwraps every partition shape the source can emit (plain splits,
-    * DV composite branches, bucket-grouped cells), so counts are
-    * conf-independent under parallel suites flipping v2 bucketing. */
-  private def plannedDataFiles(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import sources.v2.{GraftDvCleanPartition, GraftDvFilePartition}
-    def files(p: org.apache.spark.sql.connector.read.InputPartition)
-        : Seq[String] = p match {
-      case fp: FilePartition => fp.files.map(_.filePath.toString).toSeq
-      case GraftDvCleanPartition(fp: FilePartition) =>
-        fp.files.map(_.filePath.toString).toSeq
-      case p: GraftDvFilePartition =>
-        p.inner.files.map(_.filePath.toString).toSeq
-      case b: sources.v2.GraftBucketPartition =>
-        b.parts.toSeq.flatMap(files)
-      case _ => Nil
-    }
-    physicalPlan(df).collect {
-      case b: BatchScanExec => b.partitions.flatten }
-      .flatten.flatMap(files).distinct.size
-  }
-
   test("q1_agg pushes the discount filter into the parquet scan and prunes columns") {
     val p = plan("q1_agg")
     assert(p.contains("PushedFilters: [IsNotNull(l_discount), GreaterThan(l_discount,0.01)]"),
@@ -528,76 +504,6 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  /** Planner-integrated data skipping (plans.StatsPruneRule): once a
-    * directory's metadata roots are registered, a PLAIN
-    * `spark.read.parquet(dir).filter(...)` must open fewer files than
-    * the directory holds — no readRange/readKeys opt-in — and return
-    * exactly the unpruned rows. */
-  test("registered table: plain filters prune files at planning time via stats and bloom epochs") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect() // force planning through AQE final plan
-      physicalPlan(df).collectLeaves().collect {
-        case s: FileSourceScanExec => s.relation.location.inputFiles.length.toLong
-      }.sum
-    }
-    val docs = sources.Tables.documents(spark, sf)
-    // range layout on doc_id → stats envelopes are narrow and disjoint
-    val lay = util.Scratch.dir("rule_stats_lay")
-    docs.repartitionByRange(8, col("doc_id"))
-      .write.mode("overwrite").parquet(lay)
-    val statsRoot = util.Scratch.dir("rule_stats_meta") + "/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
-    // hash layout on doc_id → envelopes prune nothing, blooms must
-    val hashLay = util.Scratch.dir("rule_bloom_lay")
-    docs.repartition(8, col("doc_id"))
-      .write.mode("overwrite").parquet(hashLay)
-    val bloomRoot = util.Scratch.dir("rule_bloom_meta") + "/bloom"
-    sources.FileBloomIndex.commitFull(
-      sources.FileBloomIndex.build(spark, hashLay, "doc_id"), bloomRoot)
-    try {
-      val want = docs.filter(col("doc_id").between(10L, 40L))
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      // unregistered: correct but opens every file
-      val before = spark.read.parquet(lay)
-        .filter(col("doc_id").between(10L, 40L))
-      val totalFiles = scannedFiles(spark.read.parquet(lay).filter(lit(true)))
-      assert(scannedFiles(before) == totalFiles,
-        "without registration nothing should be pruned")
-      plans.GraftTables.register(lay,
-        statsRoot = Some(statsRoot), statsCols = Seq("doc_id"))
-      val after = spark.read.parquet(lay)
-        .filter(col("doc_id").between(10L, 40L))
-      assert(scannedFiles(after) < totalFiles,
-        "stats registration must prune files from a plain filter scan")
-      assert(after.select("doc_id").collect().map(_.getLong(0)).toSet == want,
-        "pruning must be invisible in results")
-      // bloom: point lookups through a plain isin filter
-      plans.GraftTables.register(hashLay,
-        bloomRoot = Some(bloomRoot), bloomKey = Some("doc_id"))
-      val probe = spark.read.parquet(hashLay)
-        .filter(col("doc_id").isin(7L, 21L))
-      val hashTotal = scannedFiles(spark.read.parquet(hashLay).filter(lit(true)))
-      assert(scannedFiles(probe) < hashTotal,
-        "bloom registration must prune files for equality probes")
-      assert(probe.select("doc_id").collect().map(_.getLong(0)).toSet ==
-        Set(7L, 21L))
-      // staleness degrades to keep, never to wrong rows: rewrite the
-      // layout (fresh file names) WITHOUT refreshing the stats epoch
-      docs.repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(lay)
-      val stale = spark.read.parquet(lay)
-        .filter(col("doc_id").between(10L, 40L))
-      assert(stale.select("doc_id").collect().map(_.getLong(0)).toSet == want,
-        "stale metadata excludes nothing it can't prove — results exact")
-    } finally {
-      plans.GraftTables.unregister(lay)
-      plans.GraftTables.unregister(hashLay)
-    }
-  }
-
   /** The inverted-index claim: the per-query plan must be INDEX-ONLY —
     * no tokenize (no Generate/explode), no documents text scan, and
     * the term probe pushed into the postings files as a parquet
@@ -624,7 +530,7 @@ class PlanSpec extends AnyFunSuite {
     assert(viaIndex == viaScan, "index path must equal the corpus-scan path")
   }
 
-  /** The Hilbert layout × planner-pruning composition behind
+  /** The Hilbert layout × manifest-pruning composition behind
     * q_planner_pruned_hilbert. The geometry to test honestly: F files
     * tiling a 3-D space give every file a per-dim extent of ~F^(-1/3)
     * (volume can't be beaten), so at small F a narrow probe CENTERED
@@ -634,15 +540,8 @@ class PlanSpec extends AnyFunSuite {
     * (only the blobs touching that face can intersect) — on every one
     * of the three columns, where a single-sort layout serves exactly
     * one. */
-  test("hilbert-clustered registered table: 3-D box and per-column edge probes prune files") {
+  test("hilbert-clustered manifest table: 3-D box and per-column edge probes prune files") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      physicalPlan(df).collectLeaves().collect {
-        case s: FileSourceScanExec => s.relation.location.inputFiles.length.toLong
-      }.sum
-    }
     // sf0.01 and 64 files: per-file extent is ~F^(-1/3) of each dim,
     // so a meaningful file count is what makes the multiplication of
     // extents visible — at toy file counts (say 16) every blob spans
@@ -652,49 +551,45 @@ class PlanSpec extends AnyFunSuite {
       .withColumn("cents", round(col("value") * 100, 0).cast("long"))
       .select("event_id", "t", "user_id", "cents")
     val dims = Seq("t", "user_id", "cents")
-    val lay = util.Scratch.dir("rule_hilbert_lay")
-    sinks.ParquetSink.writeZOrdered(ev, lay, dims, numFiles = 64, bits = 0)
-    val statsRoot = util.Scratch.dir("rule_hilbert_meta") + "/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, lay, dims), statsRoot)
+    val root = util.Scratch.freshDir("rule_hilbert_table") + "/t"
+    sinks.ManifestTable.create(
+      sinks.ParquetSink.clusterByCurve(ev, dims, 64), root, dims)
+    def scan(cond: org.apache.spark.sql.Column) =
+      spark.read.format("graft").load(root).filter(cond)
     def sameRows(probe: org.apache.spark.sql.DataFrame,
                  cond: org.apache.spark.sql.Column): Unit =
       assert(probe.select("event_id").collect().map(_.getLong(0)).toSet ==
         ev.filter(cond).select("event_id").collect().map(_.getLong(0)).toSet,
         "pruning must be invisible in results")
-    try {
-      plans.GraftTables.register(lay,
-        statsRoot = Some(statsRoot), statsCols = dims)
-      val total = scannedFiles(spark.read.parquet(lay).filter(lit(true)))
-      val q = dims.map(c =>
-        c -> ev.stat.approxQuantile(c, Array(0.1, 0.4, 0.6), 0.001)).toMap
-      // 3-D box over the middle ~20% of each dimension's mass: the
-      // per-dim extents multiply, so under half the files survive
-      val boxCond = dims.map(c =>
-        col(c).between(q(c)(1).toLong, q(c)(2).toLong)).reduce(_ && _)
-      val box = spark.read.parquet(lay).filter(boxCond)
-      val boxOpened = scannedFiles(box)
-      assert(boxOpened < total / 2,
-        s"3-D box opened $boxOpened of $total files — curve layout not pruning")
-      sameRows(box, boxCond)
-      // per-column edge probe (min .. p10): only blobs on that face
-      // can intersect — every one of the three columns must skip files
-      for (c <- dims) {
-        val cond = col(c) <= q(c)(0).toLong
-        val probe = spark.read.parquet(lay).filter(cond)
-        val opened = scannedFiles(probe)
-        assert(opened < total,
-          s"$c edge probe opened all $total files — no skipping on this dim")
-        sameRows(probe, cond)
-      }
-    } finally plans.GraftTables.unregister(lay)
+    val total = sinks.ManifestTable.filesAt(spark, root, 0).size
+    val q = dims.map(c =>
+      c -> ev.stat.approxQuantile(c, Array(0.1, 0.4, 0.6), 0.001)).toMap
+    // 3-D box over the middle ~20% of each dimension's mass: the
+    // per-dim extents multiply, so under half the files survive
+    val boxCond = dims.map(c =>
+      col(c).between(q(c)(1).toLong, q(c)(2).toLong)).reduce(_ && _)
+    val box = scan(boxCond)
+    val boxOpened = plannedDataFiles(box)
+    assert(boxOpened < total / 2,
+      s"3-D box opened $boxOpened of $total files — curve layout not pruning")
+    sameRows(box, boxCond)
+    // per-column edge probe (min .. p10): only blobs on that face
+    // can intersect — every one of the three columns must skip files
+    for (c <- dims) {
+      val cond = col(c) <= q(c)(0).toLong
+      val probe = scan(cond)
+      val opened = plannedDataFiles(probe)
+      assert(opened < total,
+        s"$c edge probe opened all $total files — no skipping on this dim")
+      sameRows(probe, cond)
+    }
   }
 
   /** Whole-table COUNT/MIN/MAX over a MANIFEST table (format("graft")
     * or catalog SQL) must collapse to the manifest's own envelopes —
     * the listing and the stats are one structure, so no coverage
-    * proof is even needed; a filter or untracked column degrades to
-    * the scan, exactly like the registered-directory path. */
+    * proof is even needed; a filter, an untracked column, or an
+    * unknown stats cell degrades to the scan. */
   test("manifest table aggregates answer from the manifest with zero scans") {
     import org.apache.spark.sql.functions._
     val docs = sources.Tables.documents(spark, sf)
@@ -737,6 +632,59 @@ class PlanSpec extends AnyFunSuite {
     assert(untracked.queryExecution.executedPlan.toString.contains("BatchScan"))
     assert(untracked.collect()(0).getString(0) ==
       docs.agg(min(col("lang"))).collect()(0).getString(0))
+    // COUNT(NULL) is 0, never Σ row_count — the null literal must not
+    // match the COUNT(*) shape
+    assert(spark.read.format("graft").load(root)
+      .agg(count(lit(null)).as("n")).collect()(0).getLong(0) == 0L,
+      "COUNT(null literal) must not rewrite to the row-count sum")
+    // PARTIAL-UNKNOWN stats: one appended file whose writer recorded no
+    // doc_id stats lands NULL cells among known ones. The global
+    // null-skipping fold would return a plausible wrong answer, so any
+    // consulted unknown cell must force a scan; aggregates that consult
+    // only row_count still answer from metadata
+    val quiet = spark.newSession()
+    quiet.conf.set("parquet.column.statistics.enabled#doc_id", "false")
+    sinks.ManifestTable.write(sources.Tables.documents(quiet, sf)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+      .filter(col("doc_id") < 3L).coalesce(1), root): Unit
+    val all = docs.unionByName(docs.filter(col("doc_id") < 3L))
+    val grown = spark.read.format("graft").load(root)
+    val unknownCnt = grown.agg(count(col("doc_id")).as("nn"))
+    assert(unknownCnt.queryExecution.executedPlan.toString.contains("BatchScan"),
+      "a NULL null-count cell among known cells must force a scan")
+    assert(unknownCnt.collect()(0).getLong(0) ==
+      all.filter(col("doc_id").isNotNull).count())
+    val unknownMin = grown.agg(min(col("doc_id")).as("lo"))
+    assert(unknownMin.queryExecution.executedPlan.toString.contains("BatchScan"),
+      "a NULL min cell without an all-NULL proof must force a scan")
+    assert(unknownMin.collect()(0).getLong(0) ==
+      all.agg(min(col("doc_id"))).collect()(0).getLong(0))
+    val rowsOnly = grown.agg(count(lit(1)).as("n"))
+    val rowsPhys = rowsOnly.queryExecution.executedPlan.toString
+    assert(rowsPhys.contains("LocalTableScan") && !rowsPhys.contains("BatchScan"),
+      "COUNT(*) consults only exact row counts — unknown cells in " +
+        "other columns must not disqualify it")
+    assert(rowsOnly.collect()(0).getLong(0) == all.count())
+  }
+
+  /** The stats gates run on the manifest path: each pruning gate's
+    * scan opens fewer files than its table holds, and q_meta_count's
+    * whole-table aggregate plans with no data scan at all. */
+  test("stats gates prune through the manifest: fewer files than the table holds; q_meta_count plans no scan") {
+    for ((name, dir) <- Seq("q_pruned_scan" -> "pruned_scan",
+        "q_planner_pruned" -> "planner_pruned",
+        "q_planner_pruned_hilbert" -> "planner_hilbert",
+        "q_bloom_lookup" -> "bloom_lookup")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val root = util.Scratch.dir(dir) + "/t"
+      val total = sinks.ManifestTable.filesAt(spark, root,
+        sinks.ManifestTable.latestVersion(spark, root)).size
+      val opened = plannedDataFiles(df)
+      assert(opened < total, s"$name opened $opened of its $total files")
+    }
+    val meta = plan("q_meta_count")
+    assert(meta.contains("LocalTableScan") && !meta.contains("BatchScan"),
+      s"q_meta_count must answer from the manifest:\n$meta")
   }
 
   /** The catalog SQL path must lose nothing to the indirection: the
@@ -752,209 +700,60 @@ class PlanSpec extends AnyFunSuite {
       s"no UDF fallback in the catalog path:\n$p")
   }
 
-  /** A multi-root scan (`spark.read.parquet(a, b)`) prunes each
-    * REGISTERED root independently — r8 silently lost all skipping on
-    * union reads over registered directories. */
-  test("multi-root scan: each registered root prunes independently, results exact") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      physicalPlan(df).collectLeaves().collect {
-        case s: FileSourceScanExec => s.relation.location.inputFiles.length.toLong
-      }.sum
-    }
-    val docs = sources.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-multiroot").toString
-    val (layA, layB) = (s"$base/a", s"$base/b")
-    val half = docs.count() / 2
-    docs.filter(col("doc_id") <= half)
-      .repartitionByRange(4, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.parquet(layA)
-    docs.filter(col("doc_id") > half)
-      .repartitionByRange(4, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.parquet(layB)
-    val (sA, sB) = (s"$base/statsA", s"$base/statsB")
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, layA, Seq("doc_id")), sA)
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, layB, Seq("doc_id")), sB)
-    try {
-      plans.GraftTables.register(layA, Some(sA), Seq("doc_id"))
-      plans.GraftTables.register(layB, Some(sB), Seq("doc_id"))
-      val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
-      // probes the low end of A and nothing of B: B's 4 files must all
-      // prove out, and most of A's too
-      val probe = spark.read.parquet(layA, layB)
-        .filter(col("doc_id") <= lo + 2)
-      val opened = scannedFiles(probe)
-      assert(opened <= 2,
-        s"multi-root read must prune BOTH registered roots, opened $opened/8")
-      assert(probe.select(col("doc_id")).collect().map(_.getLong(0)).toSet ==
-        docs.filter(col("doc_id") <= lo + 2)
-          .select(col("doc_id")).collect().map(_.getLong(0)).toSet)
-      // one registered + one unregistered root: the registered one
-      // still prunes, the unregistered one keeps everything
-      plans.GraftTables.unregister(layB)
-      val mixed = spark.read.parquet(layA, layB)
-        .filter(col("doc_id") <= lo + 2)
-      val openedMixed = scannedFiles(mixed)
-      assert(openedMixed <= 1 + 4 && openedMixed > opened,
-        s"mixed registration must keep all of B, got $openedMixed")
-      assert(mixed.select(col("doc_id")).collect().map(_.getLong(0)).toSet ==
-        docs.filter(col("doc_id") <= lo + 2)
-          .select(col("doc_id")).collect().map(_.getLong(0)).toSet)
-    } finally { plans.GraftTables.unregister(layA)
-      plans.GraftTables.unregister(layB) }
-  }
-
-  /** The version-keyed proof cache: planning a hot table twice must
-    * compute the metadata proofs ONCE (the second identical query
-    * issues no metadata job), and a new stats commit must invalidate
-    * structurally (version in the key), with pruning still exact. */
+  /** The version-keyed bloom proof cache: planning a hot table twice
+    * must compute the index proof ONCE (the second identical query
+    * issues no metadata job), and a new index commit — or an index
+    * rebuilt from scratch at the same root — must invalidate
+    * structurally (version and commit stamp in the key), with pruning
+    * still exact. */
   test("planning proof cache: second identical query recomputes nothing; a commit invalidates") {
     import org.apache.spark.sql.functions._
     val docs = sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val lay = java.nio.file.Files
-      .createTempDirectory("graft-proofcache").toString + "/lay"
-    docs.repartitionByRange(4, col("doc_id"))
-      .sortWithinPartitions(col("doc_id")).write.parquet(lay)
-    val statsRoot = java.nio.file.Files
-      .createTempDirectory("graft-proofcache-meta").toString + "/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
-    try {
-      plans.GraftTables.register(lay, Some(statsRoot), Seq("doc_id"))
-      val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
-      def run(): Set[Long] = spark.read.parquet(lay)
-        .filter(col("doc_id") <= lo + 2)
-        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      val want = docs.filter(col("doc_id") <= lo + 2)
-        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      val c0 = plans.StatsPruneRule.proofComputations.get()
-      assert(run() == want)
-      val c1 = plans.StatsPruneRule.proofComputations.get()
-      assert(c1 > c0, "first plan must compute the proof")
-      assert(run() == want)
-      assert(plans.StatsPruneRule.proofComputations.get() == c1,
-        "the second identical query must be a pure cache hit — zero " +
-          "metadata computations or jobs")
-      // a fresh stats commit (new data appended, then rebuilt stats)
-      // bumps the epoch version: the cache key changes, the proof
-      // recomputes, and pruning stays exact over the grown table
-      docs.filter(col("doc_id") === lo).withColumn("doc_id", col("doc_id") - 1)
-        .repartition(1).write.mode("append").parquet(lay)
-      sources.FileStats.commitStatsFull(
-        sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
-      val c2 = plans.StatsPruneRule.proofComputations.get()
-      val wantGrown = want + (lo - 1)
-      assert(run() == wantGrown, "post-commit read must see the new row")
-      assert(plans.StatsPruneRule.proofComputations.get() > c2,
-        "a stats commit must invalidate the cached proof")
-    } finally plans.GraftTables.unregister(lay)
-  }
-
-  /** Metadata-only aggregates (plans.MetaAggRule): a whole-table
-    * COUNT/MIN/MAX over a registered directory must collapse to a
-    * LocalRelation at optimization time — no file scan at all — and
-    * the rewrite must refuse to fire (degrading to a correct scan)
-    * for filtered aggregates and for stats that no longer cover the
-    * live file set. */
-  test("registered table: whole-table count/min/max answers from the stats epoch, no scan") {
-    import org.apache.spark.sql.functions._
-    val docs = sources.Tables.documents(spark, sf)
-    val lay = util.Scratch.dir("rule_meta_agg_lay")
-    docs.repartition(6).write.mode("overwrite").parquet(lay)
-    val statsRoot = util.Scratch.dir("rule_meta_agg_meta") + "/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
-    try {
-      plans.GraftTables.register(lay,
-        statsRoot = Some(statsRoot), statsCols = Seq("doc_id"))
-      val agg = spark.read.parquet(lay).agg(
-        count(lit(1)).as("n"), count(col("doc_id")).as("nn"),
-        min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      val phys = agg.queryExecution.executedPlan.toString
-      assert(phys.contains("LocalTableScan") && !phys.contains("FileScan"),
-        s"metadata aggregate must plan as a LocalTableScan:\n$phys")
-      val want = docs.agg(count(lit(1)), count(col("doc_id")),
-        min(col("doc_id")), max(col("doc_id"))).collect()(0)
-      assert(agg.collect()(0) == want,
-        "metadata answer must equal the full-scan answer")
-      // a filter disqualifies: plan scans, result stays exact
-      val filtered = spark.read.parquet(lay)
-        .filter(col("doc_id") > 10L).agg(count(lit(1)).as("n"))
-      assert(filtered.queryExecution.executedPlan.toString.contains("FileScan"),
-        "filtered aggregate must not use the metadata path")
-      assert(filtered.collect()(0).getLong(0) ==
-        docs.filter(col("doc_id") > 10L).count())
-      // an untracked column disqualifies
-      val untracked = spark.read.parquet(lay).agg(min(col("lang")).as("m"))
-      assert(untracked.queryExecution.executedPlan.toString.contains("FileScan"),
-        "untracked column must not use the metadata path")
-      // COUNT(NULL) is 0, never Σ row_count — the null literal must not
-      // match the COUNT(*) shape (Spark folds it to 0 itself; the
-      // guard is that OUR rewrite doesn't beat it with the row count)
-      val cnull = spark.read.parquet(lay)
-        .agg(count(lit(null)).as("n"))
-      assert(cnull.collect()(0).getLong(0) == 0L,
-        "COUNT(null literal) must not rewrite to the row-count sum")
-      // PARTIAL-UNKNOWN stats: one file's cells recorded as NULL
-      // (footer stats a writer omitted) among known files. The global
-      // null-skipping fold would return a plausible wrong answer, so
-      // any consulted unknown cell must force a scan; aggregates that
-      // consult only row_count may still answer from metadata.
-      val poisoned = sources.FileStats.collect(spark, lay, Seq("doc_id"))
-        .withColumn("_rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("path"))))
-        .withColumn("doc_id_nulls",
-          when(col("_rn") === 1, lit(null).cast("long"))
-            .otherwise(col("doc_id_nulls")))
-        .withColumn("doc_id_min",
-          when(col("_rn") === 1, lit(null).cast("long"))
-            .otherwise(col("doc_id_min")))
-        .withColumn("doc_id_max",
-          when(col("_rn") === 1, lit(null).cast("long"))
-            .otherwise(col("doc_id_max")))
-        .drop("_rn")
-      sources.FileStats.commitStatsFull(poisoned, statsRoot)
-      val unknownCnt = spark.read.parquet(lay)
-        .agg(count(col("doc_id")).as("nn"))
-      assert(unknownCnt.queryExecution.executedPlan.toString.contains("FileScan"),
-        "a NULL null-count cell among known cells must force a scan")
-      assert(unknownCnt.collect()(0).getLong(0) ==
-        docs.filter(col("doc_id").isNotNull).count())
-      val unknownMin = spark.read.parquet(lay)
-        .agg(min(col("doc_id")).as("lo"))
-      assert(unknownMin.queryExecution.executedPlan.toString.contains("FileScan"),
-        "a NULL min cell without an all-NULL proof must force a scan")
-      assert(unknownMin.collect()(0).getLong(0) ==
-        docs.agg(min(col("doc_id"))).collect()(0).getLong(0))
-      val rowsOnly = spark.read.parquet(lay).agg(count(lit(1)).as("n"))
-      val rowsPhys = rowsOnly.queryExecution.executedPlan.toString
-      assert(rowsPhys.contains("LocalTableScan") && !rowsPhys.contains("FileScan"),
-        "COUNT(*) consults only exact row counts — unknown cells in " +
-          "other columns must not disqualify it")
-      assert(rowsOnly.collect()(0).getLong(0) == docs.count())
-      // restore exact stats for the staleness case below
-      sources.FileStats.commitStatsFull(
-        sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
-      // staleness: rewrite the layout (different rows, fresh names)
-      // WITHOUT refreshing stats — coverage proof fails, the scan runs,
-      // and the answer reflects the LIVE data, not the stale epoch
-      docs.filter(col("doc_id") < 20L).repartition(2)
-        .write.mode("overwrite").parquet(lay)
-      val stale = spark.read.parquet(lay).agg(count(lit(1)).as("n"))
-      assert(stale.queryExecution.executedPlan.toString.contains("FileScan"),
-        "uncovered scan must not use the metadata path")
-      assert(stale.collect()(0).getLong(0) ==
-        docs.filter(col("doc_id") < 20L).count())
-    } finally plans.GraftTables.unregister(lay)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-proofcache").toString + "/t"
+    // hash layout: only the bloom index can prune a point probe
+    sinks.ManifestTable.create(docs.repartition(4, col("doc_id")), root,
+      Seq("doc_id"))
+    sinks.ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+    val ids = docs.select(col("doc_id")).collect().map(_.getLong(0)).sorted
+    val mid = ids(ids.length / 2)
+    def run(): Seq[Long] = spark.read.format("graft").load(root)
+      .filter(col("doc_id") === mid)
+      .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
+    val c0 = plans.StatsPruneRule.proofComputations.get()
+    assert(run() == Seq(mid))
+    val c1 = plans.StatsPruneRule.proofComputations.get()
+    assert(c1 > c0, "first plan must compute the proof")
+    assert(run() == Seq(mid))
+    assert(plans.StatsPruneRule.proofComputations.get() == c1,
+      "the second identical query must be a pure cache hit — zero " +
+        "metadata computations or jobs")
+    // an index commit (a new file appended, then indexed) bumps the
+    // index version: the cache key changes, the proof recomputes, and
+    // pruning stays exact over the grown table
+    sinks.ManifestTable.write(docs.filter(col("doc_id") === mid).coalesce(1),
+      root): Unit
+    sinks.ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+    val c2 = plans.StatsPruneRule.proofComputations.get()
+    assert(run() == Seq(mid, mid), "post-commit read must see the new row")
+    assert(plans.StatsPruneRule.proofComputations.get() > c2,
+      "an index commit must invalidate the cached proof")
+    // a table dropped and re-created at the same root rebuilds its
+    // index from version 0 over new files: the old generation's proof
+    // (naming the old files) must not be served — the probe still prunes
+    val rm = new org.apache.hadoop.fs.Path(root)
+    rm.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(rm, true): Unit
+    sinks.ManifestTable.create(docs.repartition(4, col("doc_id")), root,
+      Seq("doc_id"))
+    sinks.ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+    val again = spark.read.format("graft").load(root)
+      .filter(col("doc_id") === mid)
+    assert(plannedDataFiles(again) < 4,
+      "a re-created table's probe must prune against its own index")
+    assert(again.select(col("doc_id")).collect().map(_.getLong(0)).toSeq ==
+      Seq(mid))
   }
 
   test("DV-aware statistics: a mostly-deleted small side still broadcasts — live bytes and exact live rows, not raw file size") {

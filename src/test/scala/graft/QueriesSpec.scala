@@ -33,6 +33,30 @@ object TestSpark {
         a.executedPlan
       case p => p
     }
+
+  /** Distinct data files the physical plan's batch scans would read —
+    * unwraps every partition shape the source can emit (plain splits,
+    * DV composite branches, bucket-grouped cells), so counts are
+    * conf-independent under parallel suites flipping v2 bucketing. */
+  def plannedDataFiles(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import sources.v2.{GraftDvCleanPartition, GraftDvFilePartition}
+    def files(p: org.apache.spark.sql.connector.read.InputPartition)
+        : Seq[String] = p match {
+      case fp: FilePartition => fp.files.map(_.filePath.toString).toSeq
+      case GraftDvCleanPartition(fp: FilePartition) =>
+        fp.files.map(_.filePath.toString).toSeq
+      case p: GraftDvFilePartition =>
+        p.inner.files.map(_.filePath.toString).toSeq
+      case b: sources.v2.GraftBucketPartition =>
+        b.parts.toSeq.flatMap(files)
+      case _ => Nil
+    }
+    physicalPlan(df).collect {
+      case b: BatchScanExec => b.partitions.flatten }
+      .flatten.flatMap(files).distinct.size
+  }
 }
 
 /** Every registered query runs and yields a sane result on sf0.001;

@@ -468,10 +468,8 @@ class SinksSpec extends AnyFunSuite {
 
   /** The OPTIMIZE loop: streaming-style appends degrade a curve
     * layout's skipping (each appended file spans ~the full domain of
-    * every clustering column), reclusterTable restores it, and one
-    * MetadataMaintenance tick brings the stats epoch back in step —
-    * live files covered, dead paths dropped. */
-  test("reclusterTable restores box-query skipping after appends; tick refreshes metadata") {
+    * every clustering column), and reclusterTable restores it. */
+  test("reclusterTable restores box-query skipping after appends") {
     val ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
       .select(col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("t"),
@@ -509,98 +507,12 @@ class SinksSpec extends AnyFunSuite {
     val degraded = candidates()
     assert(degraded >= clean + 5,
       s"appended files should degrade skipping: clean=$clean degraded=$degraded")
-    // metadata loop across the rewrite: tick before (indexes appended
-    // files), recluster, tick after (indexes new layout, drops dead)
-    val man = s"$base/manifest"
-    val statsRoot = s"$base/meta/stats"
-    val bloomRoot = s"$base/meta/bloom"
-    sources.MetadataMaintenance.tick(
-      spark, dir, man, statsRoot, dims, bloomRoot, "event_id"): Unit
     sinks.ParquetSink.reclusterTable(spark, dir, dims, 48)
     val restored = candidates()
     assert(restored <= clean + 4,
       s"recluster must restore skipping: clean=$clean restored=$restored " +
         s"(degraded was $degraded)")
     assert(rows() == allRows, "recluster must preserve every row")
-    val t = sources.MetadataMaintenance.tick(
-      spark, dir, man, statsRoot, dims, bloomRoot, "event_id")
-    assert(t.statsReconciled.nonEmpty && t.bloomReconciled.nonEmpty,
-      "tick after recluster must drop the dead pre-rewrite paths")
-    // the stats epoch now covers exactly the live files
-    val live = new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(_.getName).toSet
-    val indexed = sinks.VersionedTable.read(spark, statsRoot)
-      .select("path").collect()
-      .map(r => new java.io.File(r.getString(0)).getName).toSet
-    assert(indexed == live,
-      s"stats epoch must cover exactly the live files (${indexed.size} vs ${live.size})")
-  }
-
-  /** The incremental form: selection is metadata-only from the stats
-    * epoch, only the degraded (appended) files are rewritten — the
-    * clean curve files survive BY NAME, which is the cost-∝-degraded
-    * proof — and skipping is restored. */
-  test("reclusterIncremental rewrites only the degraded files and restores skipping") {
-    val ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-      .select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("t"),
-        col("user_id").as("u"), (col("value") * 100).cast("long").as("v"))
-    val dims = Seq("t", "u", "v")
-    val base = java.nio.file.Files.createTempDirectory("graft-recli").toString
-    val dir = s"$base/table"
-    val bulk = ev.filter(col("event_id") % 5 =!= 4)
-    val late = ev.filter(col("event_id") % 5 === 4)
-    sinks.ParquetSink.writeZOrdered(bulk, dir, dims, 32, bits = 0)
-    def files(): Set[String] = new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(_.getName).toSet
-    val cleanFiles = files()
-    (0 until 4).foreach(i => late.filter(col("event_id") % 20 === (5 * i + 4))
-      .coalesce(1).write.mode("append").parquet(dir))
-    val appended = files() -- cleanFiles
-    assert(appended.size == 4)
-    val man = s"$base/manifest"
-    val statsRoot = s"$base/meta/stats"
-    val bloomRoot = s"$base/meta/bloom"
-    sources.MetadataMaintenance.tick(
-      spark, dir, man, statsRoot, dims, bloomRoot, "event_id"): Unit
-    val rep = sinks.ParquetSink.reclusterIncremental(spark, dir, dims, statsRoot)
-    // exactly the appended (wide-envelope) files were rewritten
-    assert(rep.rewrittenFiles == 4 && rep.keptFiles == cleanFiles.size,
-      s"selection must be exactly the degraded files: $rep")
-    assert(rep.rewrittenRows == late.count())
-    // the clean curve files survive BY NAME — nothing else was touched
-    val after = files()
-    assert(cleanFiles.subsetOf(after), "clean files must survive untouched")
-    assert((after -- cleanFiles).size == rep.newFiles &&
-      appended.forall(!after.contains(_)), "appended files must be replaced")
-    // rows exact; skipping restored: the new files are curve-ordered
-    // among themselves, so a box probe's candidates drop back
-    assert(spark.read.parquet(dir).select("event_id").collect()
-      .map(_.getLong(0)).toSet ==
-      ev.select("event_id").collect().map(_.getLong(0)).toSet)
-    val box = dims.map { c =>
-      val q = ev.stat.approxQuantile(c, Array(0.4, 0.6), 0.001)
-      c -> (q(0).toLong, q(1).toLong)
-    }.toMap
-    def candidates(): Long = {
-      val aggs = dims.flatMap(c =>
-        Seq(min(col(c)).as(s"${c}_lo"), max(col(c)).as(s"${c}_hi")))
-      spark.read.parquet(dir).groupBy(input_file_name().as("f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .filter(dims.map { c =>
-          val (lo, hi) = box(c)
-          col(s"${c}_lo") <= hi && col(s"${c}_hi") >= lo
-        }.reduce(_ && _)).count()
-    }
-    assert(candidates() <= cleanFiles.size / 2 + rep.newFiles,
-      "box skipping must be restored after the incremental rewrite")
-    // idempotence: a second pass finds nothing degraded
-    sources.MetadataMaintenance.tick(
-      spark, dir, man, statsRoot, dims, bloomRoot, "event_id"): Unit
-    val rep2 = sinks.ParquetSink.reclusterIncremental(spark, dir, dims, statsRoot)
-    assert(rep2.rewrittenFiles == 0, s"second pass must be a no-op: $rep2")
   }
 
   test("Excel sink produces a valid xlsx with sorted styled sheets and null->''") {
@@ -745,54 +657,12 @@ class SinksSpec extends AnyFunSuite {
     val after = sinks.VersionedTable.readVersion(spark, root, v1)
     assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty,
       "optimize must not change content")
-    def spans(v: Long): Seq[Long] = sources.FileStats
-      .collect(spark, s"$root/epoch=$v", Seq("doc_id"))
+    def spans(v: Long): Seq[Long] = sources.FooterStats
+      .scanStats(spark.read.parquet(s"$root/epoch=$v"), Seq("doc_id"))
       .select(col("doc_id_max") - col("doc_id_min"))
       .as[Long].collect().toSeq
     assert(spans(v1).max < spans(v0).max,
       "range-clustered files must carry narrower envelopes than the hash layout")
-  }
-
-  test("graft DSv2 writeWithStats: zero-option reads prune via auto-discovered stats; time travel degrades soundly") {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.sparkPlan.collect { case b: BatchScanExec =>
-        b.partitions.flatten.collect { case fp: FilePartition =>
-          fp.files.map(_.filePath.toString).toSeq }.flatten
-      }.flatten.distinct.size
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-auto").toString
-    val root = s"$base/t"
-    val docs = sources.Tables.documents(spark, sf)
-      .select("doc_id", "lang", "n_chars")
-    sources.v2.GraftTableWriter.writeWithStats(
-      docs.repartitionByRange(4, col("doc_id"))
-        .sortWithinPartitions(col("doc_id")), root, Seq("doc_id"))
-    val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
-    val want = docs.filter(col("doc_id") <= lo + 2)
-      .select("doc_id").as[Long].collect().toSet
-    // NO options, NO registration: the _stats convention alone prunes
-    val pruned = spark.read.format("graft").load(root)
-      .filter(col("doc_id") <= lo + 2)
-    assert(scannedFiles(pruned) < 4,
-      "auto-discovered stats must prune a zero-option read")
-    assert(pruned.select("doc_id").as[Long].collect().toSet == want)
-    // a second writeWithStats epoch refreshes the stats to ITS files
-    sources.v2.GraftTableWriter.writeWithStats(
-      docs.repartitionByRange(2, col("doc_id"))
-        .sortWithinPartitions(col("doc_id")), root, Seq("doc_id"))
-    val cur = spark.read.format("graft").load(root)
-      .filter(col("doc_id") <= lo + 2)
-    assert(scannedFiles(cur) < 2)
-    assert(cur.select("doc_id").as[Long].collect().toSet == want)
-    // time travel to epoch 0: the refreshed stats list none of its
-    // files, so nothing is excluded — full listing, exact rows
-    val old = spark.read.format("graft").option("versionAsOf", 0)
-      .load(root).filter(col("doc_id") <= lo + 2)
-    assert(scannedFiles(old) == 4,
-      "stats for another epoch must exclude nothing from this one")
-    assert(old.select("doc_id").as[Long].collect().toSet == want)
   }
 
   test("graft DSv2 source inherits parquet aggregate pushdown (count/min/max from footers)") {
@@ -826,8 +696,6 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("graft DSv2 source: snapshot isolation, time travel, in-source stats pruning") {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.FilePartition
     val base = java.nio.file.Files
       .createTempDirectory("graft-dsv2-spec").toString
     val root = s"$base/table"
@@ -855,48 +723,32 @@ class SinksSpec extends AnyFunSuite {
       spark.read.format("graft").option("versionAsOf", 99).load(root)
     }
     assert(ex.getMessage.contains("no epoch 99"))
-    // in-source stats pruning: a fresh range layout + stats epoch;
-    // a pushed range filter must open fewer files than the epoch holds
+    // in-source stats pruning: a range-laid manifest table carries its
+    // per-file envelopes in the manifest; a pushed range filter must
+    // open fewer files than the version holds
     val root2 = s"$base/layout"
-    sinks.VersionedTable.write(
+    sinks.ManifestTable.create(
       docs.repartitionByRange(4, col("doc_id"))
-        .sortWithinPartitions(col("doc_id")), root2)
-    val statsRoot = s"$base/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, s"$root2/epoch=0", Seq("doc_id")),
-      statsRoot)
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.sparkPlan.collect { case b: BatchScanExec =>
-        b.partitions.flatten.collect { case fp: FilePartition =>
-          fp.files.map(_.filePath.toString).toSeq }.flatten
-      }.flatten.distinct.size
+        .sortWithinPartitions(col("doc_id")), root2, Seq("doc_id"))
     val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
-    val pruned = spark.read.format("graft")
-      .option("statsRoot", statsRoot).option("statsCols", "doc_id")
-      .load(root2).filter(col("doc_id") <= lo + 2)
-    val full = spark.read.format("graft").load(root2)
-    assert(scannedFiles(full.filter(col("doc_id") <= lo + 2)) == 4,
-      "without metadata options every epoch file is listed")
-    assert(scannedFiles(pruned) < 4,
-      "pushed range filter must prune files against the stats epoch")
+    val pruned = spark.read.format("graft").load(root2)
+      .filter(col("doc_id") <= lo + 2)
+    assert(plannedDataFiles(pruned) < 4,
+      "pushed range filter must prune files against the manifest envelopes")
     assert(pruned.select("doc_id").as[Long].collect().toSet ==
       docs.filter(col("doc_id") <= lo + 2).select("doc_id")
         .as[Long].collect().toSet,
       "in-source pruning must be invisible in results")
-    // bloom options: equality/IN probes prune on a HASH layout, where
+    // bloom index: equality/IN probes prune on a HASH layout, where
     // every file's min/max envelope spans every probe
     val root3 = s"$base/hashlayout"
-    sinks.VersionedTable.write(
-      docs.repartition(4, col("doc_id")), root3)
-    val bloomRoot = s"$base/bloom"
-    sources.FileBloomIndex.commitFull(
-      sources.FileBloomIndex.build(spark, s"$root3/epoch=0", "doc_id"),
-      bloomRoot)
-    val probe = spark.read.format("graft")
-      .option("bloomRoot", bloomRoot).option("bloomKey", "doc_id")
-      .load(root3).filter(col("doc_id").isin(lo, lo + 1))
-    assert(scannedFiles(probe) < 4,
-      "pushed IN probe must prune files against the bloom epoch")
+    sinks.ManifestTable.create(docs.repartition(4, col("doc_id")), root3,
+      Seq("doc_id"))
+    sinks.ManifestTable.buildBloom(spark, root3, "doc_id"): Unit
+    val probe = spark.read.format("graft").load(root3)
+      .filter(col("doc_id").isin(lo, lo + 1))
+    assert(plannedDataFiles(probe) < 4,
+      "pushed IN probe must prune files against the bloom index")
     assert(probe.select("doc_id").as[Long].collect().toSet ==
       Set(lo, lo + 1))
   }
